@@ -55,7 +55,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from data_engineering_examples_spark.plans import all_specs  # noqa: E402
-from data_engineering_examples_spark.scratch import MATERIALIZE_MODE_ENV  # noqa: E402
 from data_engineering_examples_spark.session import get_spark  # noqa: E402
 
 
@@ -143,11 +142,6 @@ def main() -> None:
                 f"data_engineering_examples_spark/plans (see CAPABILITIES.md)"
             )
         specs = {n: specs[n] for n in names}
-    # Single-JVM bench opts into materialize()'s localCheckpoint fast path
-    # (no filesystem round-trip per substrate). Everything else — driver
-    # correctness runs, tests, real clusters — gets the durable
-    # scratch-parquet impl by default; see scratch.materialize.
-    os.environ.setdefault(MATERIALIZE_MODE_ENV, "local")
     spark = get_spark("bench")
 
     # warm-up: JVM, codegen, parquet footer caches
@@ -156,10 +150,7 @@ def main() -> None:
     ).save()
     _warm_python_and_streaming(spark)
 
-    from data_engineering_examples_spark.scratch import (
-        drain_substrate_hits,
-        release_local_checkpoints,
-    )
+    from data_engineering_examples_spark.scratch import drain_substrate_hits
 
     # Session-shared substrate builds (memo_substrate) are timed as their
     # OWN named entries, once per session — a production pipeline
@@ -200,13 +191,6 @@ def main() -> None:
             # serialization-to-driver cost — measures the engine, not the
             # pipe.
             df.write.format("noop").mode("overwrite").save()
-            # release this query's localCheckpoint substrates NOW (the
-            # result is fully materialized): without this, every past
-            # query's dead blocks stay pinned in the unified memory pool
-            # until a driver GC drains ContextCleaner's queue, and late
-            # checkpoint-heavy queries (graph CC, PageRank) measurably
-            # slow down — a 1.4-1.5x in-context drag at a 16g heap.
-            release_local_checkpoints()
             dt = round(time.perf_counter() - t0, 4)
             runs[name].append(dt)
             hits = drain_substrate_hits()

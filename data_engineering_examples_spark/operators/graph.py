@@ -14,8 +14,8 @@ iterative job that loses all progress on one lost executor is not a
 cluster algorithm).
 
 Used by q72 (dedup clusters over exact+LSH edges) and q131 (patient
-record-linkage clusters); correctness of the round counts is verified by
-both queries' recursive-CTE oracles, not assumed.
+record-linkage clusters); the loop runs to its probed fixpoint, and both
+queries' recursive-CTE oracles check the resulting components.
 """
 
 from __future__ import annotations
@@ -35,7 +35,7 @@ _CC_MAX_ROUNDS = 64
 
 
 def connected_components(
-    nodes: DataFrame, edges: DataFrame, rounds: int, scratch_prefix: str = "cc"
+    nodes: DataFrame, edges: DataFrame, scratch_prefix: str = "cc"
 ) -> DataFrame:
     """``nodes``: one column ``id``; ``edges``: columns ``u``, ``v``
     (one direction suffices — both are added here). Returns
@@ -50,18 +50,16 @@ def connected_components(
     materialization.  (r13/r14 profiling measured the old probe-skip
     heuristic wasting two full post-fixpoint rounds on every
     early-converging graph: dedup/near-dup graphs are small-diameter
-    cliques that fix by round 1-2 while every caller hints 4 — q226 ran
-    45 jobs for 1.5 executor-seconds of real work.)  Labels only ever
-    decrease, so the exact DECIMAL sum is strictly monotone and "sum
-    unchanged" == "no label moved" == converged.  ``rounds`` survives
-    as the caller's expected-diameter annotation and is validated
-    against the cap, but never suppresses a probe: a fixed round count
-    matched to the test fixture is NOT scale-safe — the r9
-    synthetic-sf1 sweep caught exactly that (10× data produced
-    components whose diameter exceeded the 4-round budget q235 shipped
-    with, and the full-closure oracle flagged the truncated labels).
-    The one-row fetch per round is a convergence gate, not a data path
-    (same category as q150's audit verdict fetch; pinned in
+    cliques that fix by round 1-2 — q226 ran 45 jobs for 1.5
+    executor-seconds of real work.)  Labels only ever decrease, so the
+    exact DECIMAL sum is strictly monotone and "sum unchanged" == "no
+    label moved" == converged.  There is deliberately no caller-supplied
+    round count: a fixed count matched to the test fixture is NOT
+    scale-safe — the r9 synthetic-sf1 sweep caught exactly that (10×
+    data produced components whose diameter exceeded the 4-round budget
+    q235 shipped with, and the full-closure oracle flagged the truncated
+    labels).  The one-row fetch per round is a convergence gate, not a
+    data path (same category as q150's audit verdict fetch; pinned in
     test_plan_invariants).
 
     ``scratch_prefix`` keys this caller's materialized substrates: two
@@ -71,16 +69,6 @@ def connected_components(
     collect silently reads the wrong graph's labels. Repeated
     invocations of the SAME caller intentionally reuse the paths (the
     scratch module's wipe-per-call space-reuse contract)."""
-    if rounds > _CC_MAX_ROUNDS - 2:
-        # the fixpoint needs two probed rounds to be OBSERVED; a hint
-        # at/above the hard cap would suppress every probe and turn a
-        # converged graph into a guaranteed RuntimeError — reject it at
-        # call time instead
-        raise ValueError(
-            f"rounds hint {rounds} leaves no probe budget under the "
-            f"{_CC_MAX_ROUNDS}-round cap; pointer-jumped min-label "
-            "propagation never needs anywhere near this many rounds"
-        )
     # explode, not self-union: a union evaluates the caller's edge plan
     # TWICE inside the one materialization job (and the edge list often
     # comes out of an expensive candidate pipeline — q235's Arrow pair

@@ -757,17 +757,14 @@ def q63_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Algorithm: min-label propagation WITH pointer jumping — each round
 # every node adopts min(own label, neighbours' labels, label-of-label),
-# so convergence is O(log diameter) rounds, not O(diameter);
-# CC_ROUNDS = 4 covers diameters into the tens of thousands. Each round
+# so convergence is O(log diameter) rounds, not O(diameter), and the
+# loop runs until a probe sees no label move. Each round
 # is two shuffles (neighbour min on u, label lookup on label); rounds
 # are materialized through scratch.materialize() so the plan stays flat
 # instead of doubling per iteration, on storage that survives executor
 # loss (the GraphFrames/GraphX CC pattern re-expressed on DataFrames).
 # Deterministic: min over a semilattice, order-independent. The oracle
-# is the full transitive closure via DuckDB's recursive CTE, so the
-# fixed round count is verified sufficient, not assumed.
-
-CC_ROUNDS = 4
+# is the full transitive closure via DuckDB's recursive CTE.
 
 
 @register(
@@ -832,7 +829,7 @@ def q72_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         from ..operators.graph import connected_components
 
         cc = connected_components(
-            docs.select(F.col("doc_id").alias("id")), edges, CC_ROUNDS,
+            docs.select(F.col("doc_id").alias("id")), edges,
             scratch_prefix="q72_cc",
         )
         return cc.select(

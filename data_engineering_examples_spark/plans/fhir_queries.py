@@ -841,7 +841,6 @@ def q45_extract_collection(spark: SparkSession, sf_dir: str) -> DataFrame:
 # block; CC is O(log d) rounds over the (tiny) link set.
 
 LINK_SCORE_MIN = 2
-LINK_CC_ROUNDS = 3
 
 
 @register(
@@ -909,7 +908,7 @@ def q131_patient_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("u", "v")
     )
     cc = connected_components(
-        p.select("id"), edges, LINK_CC_ROUNDS, scratch_prefix="q131_cc"
+        p.select("id"), edges, scratch_prefix="q131_cc"
     )
     return cc.select(
         F.col("id").alias("patient_id"),

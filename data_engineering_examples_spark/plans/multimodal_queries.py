@@ -684,10 +684,10 @@ def q225_audio_envelope_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # KEEP-LIST — one canonical image per perceptual cluster plus how many
 # bytes deduplication reclaims (the multimodal analog of q146's
 # canonical documents). Clusters come from pointer-doubling connected
-# components over the pair edges (operators/graph.py — bounded rounds,
-# durable per-round substrates); the oracle recomputes the FULL
-# transitive closure with a recursive CTE, so an insufficient round
-# count fails loudly rather than silently splitting clusters. Scale
+# components over the pair edges (operators/graph.py — rounds run to
+# the probed fixpoint, durable per-round substrates); the oracle
+# recomputes the FULL transitive closure with a recursive CTE, so a
+# wrongly split cluster fails loudly. Scale
 # shape: edges are bounded by band-bucket occupancy (q224), components
 # by family size; the per-cluster aggregate shuffles 16-byte rows, and
 # payload bytes enter only as octet_length computed inside the scan
@@ -745,7 +745,6 @@ def q226_canonical_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     cc = connected_components(
         meta.select(F.col("media_id").alias("id")),
         pairs.select(F.col("a_id").alias("u"), F.col("b_id").alias("v")),
-        rounds=4,  # components are near-dup families; diameter << 2^4
         scratch_prefix="q226cc",
     )
     agg = (

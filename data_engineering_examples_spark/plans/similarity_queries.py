@@ -2218,9 +2218,9 @@ def q230_embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   linearly). Norms are computed ONCE per vector and
 #   ride the join — each pair pays one 64-dim fold, not three.
 # * CC over dup-group members only (nodes = edge endpoints, a tiny
-#   fraction of the corpus), pointer-jumping rounds through the durable
-#   scratch seam as in q72; the recursive-CTE oracle verifies the fixed
-#   round count covers the realized diameters.
+#   fraction of the corpus), pointer-jumping rounds to the probed
+#   fixpoint through the durable scratch seam as in q72; the
+#   recursive-CTE oracle checks the resulting components.
 #
 # Float determinism: cosines are div/mul/sqrt over the left-fold double
 # dot (module docstring) — all correctly-rounded IEEE ops, bit-identical
@@ -2228,7 +2228,6 @@ def q230_embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # because vec_id is unique.
 
 SEMDEDUP_COS = 0.40
-SEMDEDUP_CC_ROUNDS = 4
 
 #: Row cap for broadcasting the SemDeDup pair-probe side.  Each row is
 #: a 64-double embedding (512 B) + id/norm/key (~100 B with row
@@ -2445,9 +2444,7 @@ def q231_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ..operators.graph import connected_components
 
-    cc = connected_components(
-        nodes, edges, SEMDEDUP_CC_ROUNDS, scratch_prefix="q231_cc"
-    )
+    cc = connected_components(nodes, edges, scratch_prefix="q231_cc")
     w_keep = Window.partitionBy("component").orderBy(
         F.asc("cent_cos"), F.asc("vec_id")
     )
@@ -2738,9 +2735,7 @@ def q235_semantic_dedup_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ..operators.graph import connected_components
 
-    cc = connected_components(
-        nodes, edges, SEMDEDUP_CC_ROUNDS, scratch_prefix="q235_cc"
-    )
+    cc = connected_components(nodes, edges, scratch_prefix="q235_cc")
     w_keep = Window.partitionBy("component").orderBy(
         F.desc("dist"), F.asc("vec_id")
     )

@@ -190,8 +190,9 @@ def q156_kmv_join_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = load_tables(spark, sf_dir, ["orders", "customer"])
     # the two per-side sketch builds are independent full passes over
-    # different tables: overlap them (guide §2.6) — see the concurrent-
-    # materialize attribution note on scratch._LOCAL_CHECKPOINT_IDS
+    # different tables: overlap them (guide §2.6) — the distinct names
+    # keep the two materialize() scratch paths disjoint, and
+    # scratch_root() is lock-guarded against concurrent first calls
     from ..concurrency import run_concurrently
 
     ka, kb = run_concurrently(

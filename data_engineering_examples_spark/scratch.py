@@ -43,78 +43,9 @@ _ROOT: str | None = None
 #: splitting substrates across roots and orphaning one of them.
 _ROOT_LOCK = threading.Lock()
 
-#: Env switch for :func:`materialize`.  ``parquet`` (default) is the
-#: durable, cluster-correct implementation; ``local`` is the
-#: single-machine bench fast path (localCheckpoint).
-MATERIALIZE_MODE_ENV = "SPARK_GRAFT_MATERIALIZE"
-
 #: per-name invocation counter for :func:`materialize` path salting —
 #: see the generation contract in its docstring.
 _MATERIALIZE_GEN: dict[str, int] = {}
-
-#: Persistent-RDD ids created by materialize() in ``local`` mode,
-#: pending release.  localCheckpoint pins its blocks in executor
-#: storage until the JVM's ContextCleaner happens to collect the RDD —
-#: which needs a driver GC cycle to drain the weak-reference queue, so
-#: on a large heap the blocks of EVERY past query pile up for minutes.
-#: Across a long-lived session (the 200+-query bench, a notebook, a
-#: query service) that is a real storage-memory leak: late queries
-#: fight earlier queries' dead substrates for the unified memory pool.
-#: The session loop should call :func:`release_local_checkpoints` after
-#: each query's results are fully materialized.
-#:
-#: We track JVM RDD ids, not DataFrames: ``DataFrame.unpersist()``
-#: only clears the SQL CacheManager entry, while localCheckpoint's
-#: blocks belong to the *internal* RDD the Dataset wrapped — reachable
-#: only through ``SparkContext.getPersistentRDDs``.  The ids are
-#: captured as the before/after diff around the (eager) checkpoint
-#: call.  CONCURRENT materialize() calls (the guide-§2.6 overlap
-#: seams) can only over-attribute: a checkpoint id is always present in
-#: its own caller's after-diff (never in that caller's before-snapshot),
-#: so ids are never missed — at worst an id lands in two diffs and is
-#: released twice, which ``jrdd.unpersist`` treats as a no-op.
-_LOCAL_CHECKPOINT_IDS: list[int] = []
-
-
-def _persistent_rdd_ids(spark) -> set[int]:
-    try:
-        return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
-    except Exception:  # Connect-mode or stopped context: no JVM handle
-        return set()
-
-
-def release_local_checkpoints() -> int:
-    """Unpersist every ``local``-mode substrate checkpointed since the
-    last call; returns how many were released.  ONLY safe once the
-    caller has fully materialized the consuming query's results (the
-    same collect-before-reinvoke contract the scratch paths already
-    carry): localCheckpoint truncates lineage, so a released substrate
-    is unrecoverable — a late read fails loudly with
-    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND rather than recomputing.  A no-op
-    in ``parquet`` mode, where substrates live on disk and the
-    path-generation logic bounds space instead."""
-    n = 0
-    try:
-        from pyspark.sql import SparkSession
-
-        spark = SparkSession.getActiveSession()
-        jmap = (
-            spark.sparkContext._jsc.getPersistentRDDs() if spark is not None else None
-        )
-    except Exception:
-        jmap = None
-    while _LOCAL_CHECKPOINT_IDS:
-        rid = _LOCAL_CHECKPOINT_IDS.pop()
-        n += 1
-        if jmap is None:
-            continue  # session gone — blocks died with it
-        try:
-            jrdd = jmap.get(rid)
-            if jrdd is not None:
-                jrdd.unpersist(False)
-        except Exception:
-            pass
-    return n
 
 
 def scratch_root() -> str:
@@ -142,21 +73,12 @@ def materialize(df, name: str):
     Several queries compute an intermediate (LSH band table, KMV sketch,
     k-means seed assignment, edge list) that feeds MULTIPLE downstream
     branches; without a cut point Spark recomputes the substrate per
-    branch and the lineage doubles each iteration.  Two implementations
-    sit behind this seam, selected by ``SPARK_GRAFT_MATERIALIZE``:
-
-    - ``parquet`` (default): write the substrate to a per-process scratch
-      directory and read it back.  This is the CLUSTER-CORRECT impl:
-      the materialized blocks live on durable storage, so losing an
-      executor merely re-reads the file split — the job survives.  At
-      real scale the scratch root maps to the job's scratch bucket /
-      HDFS tmp (see module docstring); the lifecycle contract is
-      identical.
-    - ``local``: ``localCheckpoint()``.  Faster on ``local[*]`` (no
-      filesystem round-trip) but NOT fault-tolerant — a lost executor
-      kills the job because the checkpointed blocks have no recompute
-      path — and it pins the substrate in executor storage memory.
-      Only the single-JVM bench opts into this.
+    branch and the lineage doubles each iteration.  The substrate is
+    written to a per-process scratch directory and read back: the
+    materialized blocks live on durable storage, so losing an executor
+    merely re-reads the file split — the job survives.  At real scale
+    the scratch root maps to the job's scratch bucket / HDFS tmp (see
+    module docstring); the lifecycle contract is identical.
 
     ``name`` must be unique per call site (it keys the scratch path).
     Repeated invocations of the SAME call site are generation-salted:
@@ -168,12 +90,6 @@ def materialize(df, name: str):
     frame older than one generation fails LOUDLY (path gone) instead of
     silently reading the wrong rows.
     """
-    mode = os.environ.get(MATERIALIZE_MODE_ENV, "parquet")
-    if mode == "local":
-        before = _persistent_rdd_ids(df.sparkSession)
-        out = df.localCheckpoint()  # eager: the internal RDD persists NOW
-        _LOCAL_CHECKPOINT_IDS.extend(_persistent_rdd_ids(df.sparkSession) - before)
-        return out
     gen = _MATERIALIZE_GEN.get(name, -1) + 1
     _MATERIALIZE_GEN[name] = gen
     base = os.path.join(scratch_root(), "materialize")
@@ -224,12 +140,6 @@ def memo_substrate(spark, name: str, sf_dir: str, build):
     This is how a production corpus pipeline treats dedup clusters: a
     table materialized once per corpus snapshot, not a view recomputed
     by every consumer.
-
-    Always parquet, NEVER localCheckpoint, regardless of
-    ``SPARK_GRAFT_MATERIALIZE``: the bench loop calls
-    ``release_local_checkpoints()`` after each query, which would
-    unpersist a checkpointed memo out from under the NEXT query's read
-    — durable files are the only storage whose lifetime spans queries.
 
     Contract: the files under ``sf_dir`` are immutable for the life of
     the session (true for the driver, bench, and pytest, whose fixture

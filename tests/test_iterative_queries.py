@@ -206,9 +206,8 @@ def test_embedding_drift_zero_for_mirrored_batches(spark, tmp_path):
 def test_cc_converges_past_round_hint_on_long_path(spark):
     """The r9 synthetic-sf1 sweep caught a fixed CC round budget
     silently truncating large-diameter components (q235 at 10× data).
-    connected_components must now iterate to the FIXPOINT regardless of
-    the ``rounds`` hint: a 200-node path graph (diameter 199) with a
-    hint of 2 must still collapse to one component labeled by the
+    connected_components iterates to the FIXPOINT: a 200-node path
+    graph (diameter 199) must converge to one component labeled by the
     minimum id."""
     from data_engineering_examples_spark.operators.graph import (
         connected_components,
@@ -223,7 +222,7 @@ def test_cc_converges_past_round_hint_on_long_path(spark):
     got = {
         (r.id, r.cluster_id)
         for r in connected_components(
-            nodes, edges, rounds=2, scratch_prefix="t_ccpath"
+            nodes, edges, scratch_prefix="t_ccpath"
         ).collect()
     }
     assert got == {(i, 0) for i in range(n)}
@@ -241,7 +240,7 @@ def test_cc_empty_graph_converges_immediately(spark):
     nodes = spark.range(0).select(F.col("id"))
     edges = spark.createDataFrame([], "u long, v long")
     got = connected_components(
-        nodes, edges, rounds=2, scratch_prefix="t_ccempty"
+        nodes, edges, scratch_prefix="t_ccempty"
     ).collect()
     assert got == []
 
@@ -252,8 +251,7 @@ def test_cc_early_convergence_stops_after_two_rounds(spark):
     post-fixpoint round is two joins + a full materialization).  A
     clique converges in round 0, the round-1 probe observes the
     unchanged sum, and NO round-2 label table may ever be built — the
-    old probe-skip heuristic burned two extra rounds here whenever the
-    caller's hint said 4."""
+    old probe-skip heuristic burned two extra rounds here."""
     from data_engineering_examples_spark import scratch
     from data_engineering_examples_spark.operators.graph import (
         connected_components,
@@ -264,31 +262,12 @@ def test_cc_early_convergence_stops_after_two_rounds(spark):
     got = {
         (r.id, r.cluster_id)
         for r in connected_components(
-            nodes, edges, rounds=4, scratch_prefix="t_ccclique"
+            nodes, edges, scratch_prefix="t_ccclique"
         ).collect()
     }
     assert got == {(0, 0), (1, 0), (2, 0)}
     assert "t_ccclique_labels_r1" in scratch._MATERIALIZE_GEN
     assert "t_ccclique_labels_r2" not in scratch._MATERIALIZE_GEN
-
-
-def test_cc_rejects_round_hint_that_starves_probes(spark):
-    """A rounds hint at/above the hard cap would suppress every
-    fixpoint probe and turn ANY graph into a guaranteed RuntimeError;
-    it must be rejected at call time instead."""
-    import pytest as _pytest
-
-    from data_engineering_examples_spark.operators.graph import (
-        _CC_MAX_ROUNDS,
-        connected_components,
-    )
-
-    nodes = spark.range(2).select(F.col("id"))
-    edges = spark.createDataFrame([(0, 1)], "u long, v long")
-    with _pytest.raises(ValueError, match="probe budget"):
-        connected_components(
-            nodes, edges, rounds=_CC_MAX_ROUNDS, scratch_prefix="t_cchint"
-        )
 
 
 def test_semdedup_zero_norm_vector_fails_loudly_on_both_paths(spark, tmp_path):

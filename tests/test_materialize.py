@@ -1,12 +1,11 @@
 """The durable substrate-materialization seam (scratch.materialize).
 
-Iterative/multi-consumer queries cut lineage through ONE seam with two
-impls: scratch-parquet write-and-read (default — durable, survives
-executor loss on a real cluster) and localCheckpoint (opt-in bench fast
-path). These tests pin the contract: both modes return the same rows,
-the parquet mode actually reads from scratch storage (so a lost executor
-re-reads a file split instead of failing the job), and the env switch
-selects the impl.
+Iterative/multi-consumer queries cut lineage through ONE seam: a
+scratch-parquet write-and-read, durable so that a lost executor on a
+real cluster re-reads a file split instead of failing the job.  These
+tests pin the contract: rows and schema round-trip, the consumer plan
+reads from scratch storage, re-runs keep the previous generation
+readable, and an empty substrate keeps its schema.
 """
 
 from __future__ import annotations
@@ -15,11 +14,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from data_engineering_examples_spark.scratch import (
-    MATERIALIZE_MODE_ENV,
-    materialize,
-    scratch_root,
-)
+from data_engineering_examples_spark.scratch import materialize, scratch_root
 
 
 def _sample(spark):
@@ -28,8 +23,7 @@ def _sample(spark):
     )
 
 
-def test_parquet_mode_roundtrips_rows_and_schema(spark, monkeypatch):
-    monkeypatch.delenv(MATERIALIZE_MODE_ENV, raising=False)
+def test_parquet_mode_roundtrips_rows_and_schema(spark):
     df = _sample(spark)
     out = materialize(df, "test_mat_parquet")
     # parquet read-back relaxes nullability; names and types must hold
@@ -39,8 +33,7 @@ def test_parquet_mode_roundtrips_rows_and_schema(spark, monkeypatch):
     assert sorted(r.id for r in out.toLocalIterator()) == list(range(100))
 
 
-def test_parquet_mode_reads_from_scratch_storage(spark, monkeypatch):
-    monkeypatch.delenv(MATERIALIZE_MODE_ENV, raising=False)
+def test_parquet_mode_reads_from_scratch_storage(spark):
     out = materialize(_sample(spark), "test_mat_scan")
     plan = out._jdf.queryExecution().executedPlan().toString()
     # the consumer plan is a FileScan over the scratch root — durable
@@ -52,20 +45,10 @@ def test_parquet_mode_reads_from_scratch_storage(spark, monkeypatch):
     ) or root in plan
 
 
-def test_local_mode_uses_local_checkpoint(spark, monkeypatch):
-    monkeypatch.setenv(MATERIALIZE_MODE_ENV, "local")
-    df = _sample(spark)
-    out = materialize(df, "test_mat_local")
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Scan ExistingRDD" in plan or "LocalTableScan" in plan or "Scan parquet" not in plan
-    assert sorted(r.id for r in out.toLocalIterator()) == list(range(100))
-
-
-def test_rerun_keeps_previous_generation_readable(spark, monkeypatch):
+def test_rerun_keeps_previous_generation_readable(spark):
     # generation salting: a re-invoked call site writes a NEW path, so
     # the previous invocation's still-deferred frame reads its own data
     # (the old wipe-in-place contract silently rebound it to new rows)
-    monkeypatch.delenv(MATERIALIZE_MODE_ENV, raising=False)
     a = materialize(spark.range(5), "test_mat_rerun")
     b = materialize(spark.range(9), "test_mat_rerun")
     assert b.count() == 9
@@ -79,33 +62,9 @@ def test_rerun_keeps_previous_generation_readable(spark, monkeypatch):
     assert gens == ["test_mat_rerun__g1", "test_mat_rerun__g2"]
 
 
-def test_release_local_checkpoints_unpins_blocks(spark, monkeypatch):
-    from data_engineering_examples_spark.scratch import (
-        release_local_checkpoints,
-    )
-
-    monkeypatch.setenv(MATERIALIZE_MODE_ENV, "local")
-    release_local_checkpoints()  # drain anything from earlier tests
-    before = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-    a = materialize(_sample(spark), "test_mat_release_a")
-    b = materialize(spark.range(50), "test_mat_release_b")
-    assert a.count() == 100 and b.count() == 50
-    during = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-    assert during >= before + 2  # both substrates pinned
-    assert release_local_checkpoints() == 2
-    after = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-    assert after <= during - 2  # blocks released without waiting for GC
-    # parquet mode contributes nothing to the pending list
-    monkeypatch.delenv(MATERIALIZE_MODE_ENV, raising=False)
-    c = materialize(spark.range(7), "test_mat_release_c")
-    assert c.count() == 7
-    assert release_local_checkpoints() == 0
-
-
-def test_empty_substrate_roundtrips(spark, monkeypatch):
+def test_empty_substrate_roundtrips(spark):
     # a no-rows substrate (empty edge set, empty sketch) must come back
     # as an empty frame with the right schema, not UNABLE_TO_INFER_SCHEMA
-    monkeypatch.delenv(MATERIALIZE_MODE_ENV, raising=False)
     df = spark.range(10).filter("id < 0").select("id", (F.col("id") * 2).alias("v"))
     out = materialize(df, "test_mat_empty")
     assert out.count() == 0

@@ -8,9 +8,7 @@ value-hash oracle can't see:
   once, keep estimates in the 16-permutation domain, and order its
   per-bucket stats (min <= mean <= max);
 * memo_substrate must return the SAME rows across calls in a session,
-  key by input dir, and stay on durable parquet even in the bench's
-  ``local`` materialize mode (a localCheckpoint memo would be
-  unpersisted by release_local_checkpoints between queries).
+  key by input dir, and serve its reads from durable parquet.
 """
 
 from __future__ import annotations
@@ -80,28 +78,13 @@ def test_memo_substrate_is_stable_and_keyed_by_dir(spark, tmp_path):
     assert r3.count() == 3 and r1.count() == 5
 
 
-def test_memo_substrate_is_parquet_even_in_local_materialize_mode(spark, tmp_path):
-    from data_engineering_examples_spark.scratch import (
-        MATERIALIZE_MODE_ENV,
-        memo_substrate,
-        release_local_checkpoints,
-    )
+def test_memo_substrate_read_is_parquet_scan(spark, tmp_path):
+    from data_engineering_examples_spark.scratch import memo_substrate
 
     d = os.path.join(str(tmp_path), "in")
     os.makedirs(d)
-    old = os.environ.get(MATERIALIZE_MODE_ENV)
-    os.environ[MATERIALIZE_MODE_ENV] = "local"
-    try:
-        df = memo_substrate(
-            spark, "t_memo_local", d, lambda: spark.range(4).selectExpr("id")
-        )
-        # the bench loop releases local checkpoints after every query; a
-        # durable memo must survive that and still be readable
-        release_local_checkpoints()
-        assert df.count() == 4
-        assert "parquet" in df._jdf.queryExecution().executedPlan().toString().lower()
-    finally:
-        if old is None:
-            os.environ.pop(MATERIALIZE_MODE_ENV, None)
-        else:
-            os.environ[MATERIALIZE_MODE_ENV] = old
+    df = memo_substrate(
+        spark, "t_memo_scan", d, lambda: spark.range(4).selectExpr("id")
+    )
+    assert df.count() == 4
+    assert "parquet" in df._jdf.queryExecution().executedPlan().toString().lower()

@@ -20,6 +20,9 @@ is none; this probe is the runtime twin of that assert).
 
 Usage:
     python tools/probe_media_scale.py [K ...]      # default decades 1 10 100
+
+The session comes from ``session.get_spark``, so ``SPARK_GRAFT_CPUS``
+and ``SPARK_DRIVER_MEMORY`` size it like every other entry point.
 """
 
 from __future__ import annotations
@@ -35,17 +38,12 @@ FX = "/root/repo/fixtures"
 def main() -> None:
     decades = [int(a) for a in sys.argv[1:]] or [1, 10, 100]
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from data_engineering_examples_spark.plans import multimodal_queries as M
+    from data_engineering_examples_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
-    )
+    spark = get_spark("probe_media_scale")
     base = spark.read.parquet(f"{FX}/media.parquet")
     n_base = base.count()
 
@@ -66,7 +64,7 @@ def main() -> None:
                 F.col("media_id") + F.col("copy") * (n_base + 1),
             )
             .drop("copy")
-            .repartition(32)
+            .repartition(spark.sparkContext.defaultParallelism)
         )
         rep.write.mode("overwrite").parquet(f"/tmp/media_synth_{k}")
         scaled = spark.read.parquet(f"/tmp/media_synth_{k}")

@@ -36,10 +36,6 @@ import urllib.request
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from data_engineering_examples_spark.plans import all_specs  # noqa: E402
-from data_engineering_examples_spark.scratch import (  # noqa: E402
-    MATERIALIZE_MODE_ENV,
-    release_local_checkpoints,
-)
 
 
 def _rest(app_base: str, path: str):
@@ -62,15 +58,9 @@ def main() -> None:
         sys.exit(f"unknown queries: {unknown}")
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    os.environ.setdefault(MATERIALIZE_MODE_ENV, "local")
 
     # UI must be ON for the status REST API; everything else matches the
     # bench session so timings are comparable.
-    os.environ["SPARK_GRAFT_PROFILE_UI"] = "1"
-    from data_engineering_examples_spark import session as sess_mod
-
-    orig_get = sess_mod.get_spark
-
     from pyspark.sql import SparkSession
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -90,7 +80,6 @@ def main() -> None:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("WARN")
-    _ = orig_get  # keep the import shape stable
 
     ui = spark.sparkContext.uiWebUrl
     app_id = spark.sparkContext.applicationId
@@ -115,7 +104,6 @@ def main() -> None:
             "overwrite"
         ).save()
         dt = time.perf_counter() - t0
-        release_local_checkpoints()
         j1, s1 = job_count(), stage_snapshot()
         new_stages = [s for sid, s in s1.items() if sid not in s0]
         rec = {
