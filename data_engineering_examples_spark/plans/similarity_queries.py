@@ -21,12 +21,13 @@ oracles below use the explicit double form.
 
 Everything is built-in higher-order Column expressions — no UDFs; the
 vector math runs inside codegen on the JVM.  One measured exception:
-q235's within-cluster pair stage (quadratic in the dominant cluster
-size) uses an Arrow-batched ``applyInPandas`` kernel — a BLAS matmul
-candidate screen with a rigorous error margin, then the EXACT
+the SemDeDup within-cluster pair stage (quadratic in the dominant
+cluster size; q231/q246/q260 over the coarse clusters, q235 over the
+learned ones) uses an Arrow-batched ``applyInPandas`` kernel — a BLAS
+matmul candidate screen with a rigorous error margin, then the EXACT
 left-to-right fold re-evaluated on the boundary band — because the
-interpreted higher-order fold costs ~140µs per pair and the pair count
-is 10× q231's (see ``_semdedup_edges_arrow``).
+interpreted higher-order fold costs ~140µs per pair (see
+``_semdedup_edges``).
 """
 
 from __future__ import annotations
@@ -2210,13 +2211,12 @@ def q230_embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale shape:
 # * Centroid assignment is a broadcast cross join (K·N cosines,
 #   map-side) — the big table never shuffles for the assign.
-# * The pairwise stage shuffles once on cent_id; at 100 TB the
-#   embeddings table is bucketed by cent_id so the within-cluster self
-#   join is exchange-free, and K IS sized ceil(sqrt(N)) (r12 — the r11
-#   sf10 probe measured the old fixed-16 variant at 55-97× per decade,
-#   the (N/K)² pair wall; with K ~ √N per-cluster pair work grows
-#   linearly). Norms are computed ONCE per vector and
-#   ride the join — each pair pays one 64-dim fold, not three.
+# * The pairwise stage shuffles once on cent_id and runs each cluster
+#   through the grouped Arrow kernel (_semdedup_edges, shared with
+#   q235); K IS sized ceil(sqrt(N)) (r12 — the r11 sf10 probe measured
+#   the old fixed-16 variant at 55-97× per decade, the (N/K)² pair
+#   wall; with K ~ √N per-cluster pair work grows linearly). Norms are
+#   computed ONCE per vector and ship with it.
 # * CC over dup-group members only (nodes = edge endpoints, a tiny
 #   fraction of the corpus), pointer-jumping rounds to the probed
 #   fixpoint through the durable scratch seam as in q72; the
@@ -2228,21 +2228,6 @@ def q230_embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # because vec_id is unique.
 
 SEMDEDUP_COS = 0.40
-
-#: Row cap for broadcasting the SemDeDup pair-probe side.  Each row is
-#: a 64-double embedding (512 B) + id/norm/key (~100 B with row
-#: overhead); 1M rows ≈ 0.6 GB serialized — comfortably under the JVM's
-#: 8 GB broadcast hard limit and the 16 GB driver heap, with margin for
-#: the deserialized relation.  Past the cap the pair stage switches to
-#: the salted-cluster-key join (no broadcast of an unbounded table, per
-#: the r9 advisor note).
-_SEMDEDUP_BROADCAST_MAX_ROWS = 1_000_000
-
-#: Salt fan-out for the over-cap path: the probe side replicates
-#: SALT-fold (map-side explode, no extra shuffle stage) and each build
-#: row draws one deterministic salt, so a dominant cluster's quadratic
-#: pair enumeration spreads across SALT tasks instead of one.
-_SEMDEDUP_PAIR_SALT = 32
 
 
 def _semdedup_seed_frame(emb: DataFrame, n_rows: int) -> DataFrame:
@@ -2266,33 +2251,6 @@ def _semdedup_seed_frame(emb: DataFrame, n_rows: int) -> DataFrame:
         .orderBy("__h", "vec_id")
         .limit(max(k, 1))
         .select("vec_id")
-    )
-
-
-def _semdedup_pair_edges(a: DataFrame, b: DataFrame, pair_cos, n_rows: int) -> DataFrame:
-    """Within-cluster pair edges (u < v, cosine ≥ threshold) for the
-    JVM-fold SemDeDup path.  ``a``/``b`` are the two aliased assignment
-    projections (columns u/cid/ea/na and v/cid/eb/nb); ``pair_cos`` is
-    the cosine expression over them.  Broadcast-joins the probe side
-    while it provably fits (``n_rows`` from the materialized substrate's
-    footer count), else salts the cluster key: ``a`` takes a
-    deterministic hash-salt, ``b`` explodes across all salts, and the
-    join shuffles on (cid, __salt) so no single task owns a whole
-    dominant cluster.  Both shapes emit the identical edge set — the
-    salt never reaches the predicate or the output."""
-    if n_rows <= _SEMDEDUP_BROADCAST_MAX_ROWS:
-        joined = a.join(F.broadcast(b), "cid")
-    else:
-        salts = F.array(*[F.lit(i) for i in range(_SEMDEDUP_PAIR_SALT)])
-        a_s = a.withColumn(
-            "__salt", F.pmod(F.hash("u"), F.lit(_SEMDEDUP_PAIR_SALT)).cast("int")
-        )
-        b_s = b.withColumn("__salt", F.explode(salts))
-        joined = a_s.join(b_s, ["cid", "__salt"])
-    return (
-        joined.filter(F.col("u") < F.col("v"))
-        .filter(pair_cos >= SEMDEDUP_COS)
-        .select("u", "v", pair_cos.alias("cos_sim"))
     )
 
 
@@ -2337,27 +2295,17 @@ def _coarse_semdedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost of the coarse SemDeDup family (the r11 sf10 probe measured the
     old fixed-16-seed variants of q231/q246 at 1511s + 1625s rebuilding
     this same pair list independently; r12 wires K = ceil(√N) so the
-    per-cluster pair count stays bounded as the corpus grows). Memoized per (session, sf_dir) so the sweep pays
-    the quadratic within-cluster scan once; both consumers keep the
-    skew-aware join strategy (_semdedup_pair_edges: broadcast under the
-    row bound, salted cluster keys above it)."""
+    per-cluster pair count stays bounded as the corpus grows).  The
+    pairs come from ``_semdedup_edges``, the kernel q235 runs over its
+    learned clusters, with ``cent_id`` as the cluster.  Memoized per
+    (session, sf_dir) so q231, q246 and q260 pay the quadratic
+    within-cluster scan once."""
 
     def build() -> DataFrame:
         assign = _coarse_semdedup_assign(spark, sf_dir)
-        a = assign.select(
-            F.col("vec_id").alias("u"),
-            F.col("cent_id").alias("cid"),
-            F.col("e").alias("ea"),
-            F.col("nrm").alias("na"),
+        return _semdedup_edges(
+            assign.withColumnRenamed("cent_id", "cluster"), SEMDEDUP_COS
         )
-        b = assign.select(
-            F.col("vec_id").alias("v"),
-            F.col("cent_id").alias("cid"),
-            F.col("e").alias("eb"),
-            F.col("nrm").alias("nb"),
-        )
-        pair_cos = _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
-        return _semdedup_pair_edges(a, b, pair_cos, n_rows=assign.count())
 
     return memo_substrate(spark, "semdedup_coarse_pairs", sf_dir, build)
 
@@ -2431,10 +2379,9 @@ def _duck_semdedup_oracle() -> str:
 )
 def q231_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # assignment and pair list are MEMOIZED substrates shared with q246
-    # (r11): the skew-aware pair join strategy (broadcast under the row
-    # bound, salted cluster keys above — see _semdedup_pair_edges) now
-    # lives inside the substrate build, and this query is a pure
-    # consumer: CC over the edge set plus the keep-rule window.
+    # and q260 (r11): the pair kernel runs inside the substrate build,
+    # and this query is a pure consumer: CC over the edge set plus the
+    # keep-rule window.
     assign = _coarse_semdedup_assign(spark, sf_dir)
     edges = _coarse_semdedup_pairs(spark, sf_dir).select("u", "v")
     nodes = (
@@ -2506,8 +2453,10 @@ Q235_ITERS = 2  # Lloyd rounds, unrolled in the oracle
 _SEMDEDUP_SCREEN_SLACK = 1e-9
 
 
-def _semdedup_edges_arrow(m: DataFrame, threshold: float) -> DataFrame:
-    """Within-cluster cosine edges (u < v) via a grouped Arrow kernel.
+def _semdedup_edges(m: DataFrame, threshold: float) -> DataFrame:
+    """Within-cluster cosine edges (u < v, cos_sim >= ``threshold``) via
+    a grouped Arrow kernel — the one SemDeDup pair stage (q235 over its
+    learned clusters, ``_coarse_semdedup_pairs`` over the coarse ones).
 
     ``m`` holds one row per vector: (vec_id, cluster, e: array<double>,
     nrm: double).  The JVM formulation — self-join on cluster + the
@@ -2520,12 +2469,14 @@ def _semdedup_edges_arrow(m: DataFrame, threshold: float) -> DataFrame:
     ``_SEMDEDUP_SCREEN_SLACK``) re-run the exact sequential fold that
     defines the predicate — bit-identical to the JVM/DuckDB fold, which
     numpy ``cumsum`` reproduces (element products are single IEEE ops;
-    cumsum accumulates strictly left-to-right).
+    cumsum accumulates strictly left-to-right).  ``cos_sim`` is that
+    exact fold divided by ``nrm_u * nrm_v``, the value q260 cuts on.
 
     Scale note: one group = one task, so the dominant cluster's O(n²)
-    screen runs single-task — but as a dgemm, ~50ms per 1.6k×1.6k
-    cluster.  At corpus scale the same kernel applies per cluster after
-    the k-means K is widened ~sqrt(N) (q231's knob), which bounds n.
+    screen runs single-task — but as a row-blocked dgemm, ~50ms per
+    1.6k×1.6k cluster.  Both callers seed K ~ sqrt(N) clusters
+    (``_semdedup_seed_frame``); q235's Lloyd rounds can still grow one
+    cluster to most of the corpus.
     """
     import numpy as np
     import pandas as pd
@@ -2534,33 +2485,25 @@ def _semdedup_edges_arrow(m: DataFrame, threshold: float) -> DataFrame:
 
     def pairs(pdf: pd.DataFrame) -> pd.DataFrame:
         n = len(pdf)
-        empty = pd.DataFrame({
-            "u": pd.Series(dtype="int64"), "v": pd.Series(dtype="int64"),
-        })
-        if n < 2:
-            return empty
         ids = pdf["vec_id"].to_numpy()
         emb = np.vstack(pdf["e"].to_numpy())
         nrm = pdf["nrm"].to_numpy(dtype="float64")
+        # Zero-norm embeddings make every pair cosine 0/0.  numpy would
+        # quietly produce NaN and drop the pairs; fail loudly instead,
+        # as the engine's ANSI divideByZeroError does for the same
+        # cosine in Spark SQL.  A singleton cluster has no pairs.
+        if n > 1 and (nrm == 0.0).any():
+            raise ValueError(
+                "zero-norm embedding in SemDeDup pair stage (cosine is "
+                "0/0) — clean the corpus first"
+            )
         # row-block the screen: the full n×n cosine matrix (plus
         # triu index arrays) is O(n²·8B) — ~2 GB per 16k-row cluster,
         # which the sf1 sweep measured as allocator thrash.  A 512-row
         # block keeps peak memory at block×n doubles (~64 MB) with the
         # same dgemm throughput.
-        # Zero-norm embeddings make every pair cosine 0/0.  The JVM
-        # path fails LOUDLY on that input (Spark 4 ANSI mode raises
-        # divideByZeroError — q231 does exactly this), and numpy would
-        # instead quietly produce NaN and drop the pairs; mirror the
-        # engine's contract so q235 can never silently diverge from
-        # q231 on degenerate vectors.
-        if (nrm == 0.0).any():
-            raise ValueError(
-                "zero-norm embedding in SemDeDup pair stage (cosine is "
-                "0/0); the JVM path raises ANSI divideByZeroError on "
-                "the same input — clean the corpus first"
-            )
         blk = 512
-        out_u, out_v = [], []
+        out = [(ids[:0], ids[:0], nrm[:0])]
         for s in range(0, n - 1, blk):
             e = min(s + blk, n)
             cos_fast = (emb[s:e] @ emb.T) / np.outer(nrm[s:e], nrm)
@@ -2568,24 +2511,19 @@ def _semdedup_edges_arrow(m: DataFrame, threshold: float) -> DataFrame:
             gi = bi + s
             upper = bj > gi  # strict upper triangle, global indices
             ci, cj = gi[upper], bj[upper]
-            if ci.size == 0:
-                continue
             # exact left-to-right fold on the candidates only
             dots = np.cumsum(emb[ci] * emb[cj], axis=1)[:, -1]
-            keep = (dots / (nrm[ci] * nrm[cj])) >= threshold
-            out_u.append(ids[ci[keep]])
-            out_v.append(ids[cj[keep]])
-        if not out_u:
-            return empty
-        uu = np.concatenate(out_u)
-        vv = np.concatenate(out_v)
+            cos = dots / (nrm[ci] * nrm[cj])
+            keep = cos >= threshold
+            out.append((ids[ci[keep]], ids[cj[keep]], cos[keep]))
+        uu, vv, cc = (np.concatenate(col) for col in zip(*out))
         return pd.DataFrame({
-            "u": np.minimum(uu, vv), "v": np.maximum(uu, vv),
+            "u": np.minimum(uu, vv), "v": np.maximum(uu, vv), "cos_sim": cc,
         })
 
     return m.select("vec_id", "cluster", "e", "nrm").groupBy(
         "cluster"
-    ).applyInPandas(pairs, "u long, v long")
+    ).applyInPandas(pairs, "u long, v long, cos_sim double")
 
 
 def _duck_semdedup_learned_oracle() -> str:
@@ -2720,14 +2658,17 @@ def q235_semantic_dedup_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # one Lloyd round collapses most vectors into a dominant cluster
     # (measured 1607/2000 at sf0.1 → 1.3M candidate pairs, 10× q231's),
-    # so the pair stage runs as the grouped Arrow kernel: BLAS screen +
-    # exact-fold recheck, identical edge set to the JVM fold by the
-    # margin argument at _SEMDEDUP_SCREEN_SLACK.  Materialized: the
-    # kernel otherwise re-runs inside BOTH branches of CC's bidirected
-    # union AND the node derivation (~4 evaluations of a 1.9 s pass —
-    # r14 measured CC over lazy edges at 6.1 s vs 3.6 s over the
-    # checkpointed edge list; guide §2.4 duplicated-subtree cut).
-    edges = materialize(_semdedup_edges_arrow(m, SEMDEDUP_COS), "q235_edges")
+    # so the pair stage is the shared Arrow kernel: BLAS screen +
+    # exact-fold recheck, identical edge set to the exact fold by the
+    # margin argument at _SEMDEDUP_SCREEN_SLACK; CC needs only (u, v).
+    # Materialized: the kernel otherwise re-runs inside BOTH branches
+    # of CC's bidirected union AND the node derivation (~4 evaluations
+    # of a 1.9 s pass — r14 measured CC over lazy edges at 6.1 s vs
+    # 3.6 s over the checkpointed edge list; guide §2.4
+    # duplicated-subtree cut).
+    edges = materialize(
+        _semdedup_edges(m, SEMDEDUP_COS).select("u", "v"), "q235_edges"
+    )
     nodes = (
         edges.select(F.col("u").alias("id"))
         .union(edges.select(F.col("v").alias("id")))
@@ -2841,11 +2782,9 @@ def q246_paraphrase_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup_queries import _hashed_shingles
 
     # semantic candidates come from the MEMOIZED coarse-seed pair
-    # substrate shared with q231 (r11; K = ceil(sqrt(N)) since r12) — one scratch-parquet scan, and
-    # this query inherits the skew-aware pair join it previously lacked
-    # (its old plain cid-join serialized a dominant cluster onto one
-    # task; the r11 sf10 probe measured the two queries independently
-    # rebuilding this list at 1511s + 1625s)
+    # substrate shared with q231 and q260 (r11; K = ceil(sqrt(N)) since
+    # r12) — one scratch-parquet scan (the r11 sf10 probe measured q231
+    # and this query independently rebuilding this list at 1511s + 1625s)
     sem = _coarse_semdedup_pairs(spark, sf_dir).select(
         "u", F.col("v").alias("w"), "cos_sim"
     )
@@ -3038,8 +2977,8 @@ def q258_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # verdicts even for pairs sitting on a cut.
 #
 # Scale shape: pure consumer of _coarse_semdedup_pairs (built once per
-# session, skew-aware join inside); the sweep is |pairs| x |dial| rows
-# exploded map-side, one (threshold, doc) distinct + tiny-key agg.
+# session by the _semdedup_edges kernel); the sweep is |pairs| x |dial|
+# rows exploded map-side, one (threshold, doc) distinct + tiny-key agg.
 
 SEMDEDUP_SWEEP_MICROS = (400_000, 500_000, 600_000, 700_000, 800_000, 900_000)
 

@@ -164,14 +164,3 @@ def memo_substrate(spark, name: str, sf_dir: str, build):
     _SUBSTRATE_MEMO[key] = (path, df.schema)
     return spark.read.schema(df.schema).parquet(path)
 
-
-def clear_substrate_memo() -> int:
-    """TEST SEAM: forget every memoized substrate so the next caller
-    rebuilds (the parquet files stay until the scratch root is reaped).
-    Production sessions never need this — the memo contract is
-    immutable input dirs; tests that monkeypatch a substrate's BUILD
-    parameters (e.g. the SemDeDup broadcast cap) use it to force the
-    alternate code path through a full query invocation."""
-    n = len(_SUBSTRATE_MEMO)
-    _SUBSTRATE_MEMO.clear()
-    return n

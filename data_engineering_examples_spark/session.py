@@ -19,7 +19,6 @@ from pyspark.sql import SparkSession
 def get_spark(
     app_name: str = "data-engineering-examples-spark",
     cpus: int | str | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
     """Build (or fetch) the tuned SparkSession.
 
@@ -31,22 +30,22 @@ def get_spark(
     shuffle partition).
     """
     cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    shuffle = str(shuffle_partitions or int(cpus))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", shuffle)
+        .config("spark.sql.shuffle.partitions", str(int(cpus)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         # Spark 4 defaults ANSI on, but the fail-loudly contract (double
         # x/0 RAISES divideByZeroError rather than yielding NULL) is load-
-        # bearing: q231's JVM cosine fold and q235's numpy kernel both
-        # raise on zero-norm embeddings, and with ANSI off the JVM side
-        # would instead silently drop pairs — exactly the divergence the
-        # kernel guard exists to prevent. Pin it so a config drift or a
-        # future default flip can't change engine semantics underneath us.
+        # bearing: q231's centroid cosine and the SemDeDup pair kernel
+        # both raise on zero-norm embeddings, and with ANSI off the JVM
+        # cosine would instead yield NULL and carry on silently —
+        # exactly the divergence the kernel guard exists to prevent.
+        # Pin it so a config drift or a future default flip can't
+        # change engine semantics underneath us.
         .config("spark.sql.ansi.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")

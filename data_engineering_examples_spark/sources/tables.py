@@ -146,7 +146,7 @@ _SCALE_OUT_PARTS: dict = {}
 _SCALE_OUT_PARTS_MAX = 1024
 
 
-def scale_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:
+def scale_out(df: DataFrame) -> DataFrame:
     """Unlock executor parallelism for CPU-heavy map stages over small
     scans: repartition ONLY when the scan yields fewer partitions than
     the cluster's default parallelism.
@@ -160,7 +160,7 @@ def scale_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     definition small, so the extra exchange is cheap relative to the map
     work it parallelizes."""
     spark = df.sparkSession
-    target = min_parts or spark.sparkContext.defaultParallelism
+    target = spark.sparkContext.defaultParallelism
     # applicationId (not id(session)): object identity can be recycled
     # after a stopped session is collected, which would resurrect a
     # stale count for a new session with different configs

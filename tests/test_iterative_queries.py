@@ -271,11 +271,12 @@ def test_cc_early_convergence_stops_after_two_rounds(spark):
 
 
 def test_semdedup_zero_norm_vector_fails_loudly_on_both_paths(spark, tmp_path):
-    """A zero-norm embedding makes every pair cosine 0/0.  Spark 4's
-    ANSI mode raises divideByZeroError on q231's JVM fold path; q235's
-    Arrow kernel would instead quietly compute NaN and DROP the pairs —
-    a silent divergence.  Both paths must fail loudly on the same
-    degenerate input (r9 review finding)."""
+    """A zero-norm embedding makes every cosine 0/0, and both SemDeDup
+    variants must fail loudly on it rather than drop vectors (r9 review
+    finding).  q231 raises Spark 4 ANSI's DIVIDE_BY_ZERO from the coarse
+    assignment's centroid cosine, before its pair stage runs; q235
+    reaches the shared pair kernel, whose guard raises ``ValueError``
+    where numpy would quietly compute NaN and drop the pairs."""
     import pandas as pd
     import pytest as _pytest
 
@@ -312,46 +313,3 @@ def test_cc_scratch_isolation_across_callers(spark):
     got = {(r.doc_id, r.cluster_id) for r in df72_deferred.collect()}
     assert got == expected
 
-
-def test_semdedup_pair_stage_salted_fallback_matches_broadcast(spark, monkeypatch):
-    """q231's pair stage broadcasts the probe side only while the
-    substrate row count is under _SEMDEDUP_BROADCAST_MAX_ROWS; past the
-    cap it must fall back to the salted-cluster-key join (r9 advisor:
-    an ungated F.broadcast of the full N-row vector table is a driver
-    OOM at scale, not a shuffle fallback).  Force the cap to 0 and pin
-    that the salted shape (a) actually salts the plan and (b) emits the
-    IDENTICAL result set."""
-    from data_engineering_examples_spark.plans import similarity_queries as sq
-    from data_engineering_examples_spark.scratch import clear_substrate_memo
-
-    sf = "/root/testdata/sf0.001"
-    spec = all_specs()["q231_semantic_dedup"]
-    baseline = {tuple(r) for r in spec.fn(spark, sf).collect()}
-
-    # the pair list is a memoized substrate (r11): clear the memo so the
-    # monkeypatched cap actually drives a REBUILD through the salted
-    # path instead of re-reading the broadcast-built parquet
-    clear_substrate_memo()
-    monkeypatch.setattr(sq, "_SEMDEDUP_BROADCAST_MAX_ROWS", 0)
-    salted = {tuple(r) for r in spec.fn(spark, sf).collect()}
-    assert salted == baseline
-    clear_substrate_memo()  # leave no cap-0-built substrate for later tests
-
-    # the final q231 plan reads CC labels back from scratch parquet, so
-    # the pair join's shape must be asserted on the edges frame itself
-    a = spark.createDataFrame(
-        [(1, 10, [1.0, 0.0], 1.0), (2, 10, [1.0, 0.0], 1.0), (3, 11, [0.0, 1.0], 1.0)],
-        "u long, cid long, ea array<double>, na double",
-    )
-    b = a.select(
-        F.col("u").alias("v"), "cid", F.col("ea").alias("eb"), F.col("na").alias("nb")
-    )
-    cos = F.lit(1.0)
-    over_cap = sq._semdedup_pair_edges(a, b, cos, n_rows=10**9)
-    plan = over_cap._jdf.queryExecution().executedPlan().toString()
-    assert "__salt" in plan
-    under_cap = sq._semdedup_pair_edges(a, b, cos, n_rows=1)
-    # the pair frame carries cos_sim since r11 (q246 consumes it)
-    assert {tuple(r) for r in over_cap.collect()} == {
-        tuple(r) for r in under_cap.collect()
-    } == {(1, 2, 1.0)}

@@ -21,8 +21,10 @@ Substrates covered (scratch.memo_substrate call sites):
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 
@@ -100,27 +102,30 @@ def _normalize(df):
     return cols, sorted(repr(tuple(repr(r[c]) for c in cols)) for r in df.collect())
 
 
+#: Children alive at once.  Each child is a whole JVM, so the window
+#: follows the host's cores: starting all of them together ran a
+#: 4-vCPU / 16 GB host out of memory.
+_WINDOW = max(1, (os.cpu_count() or 1) // 2)
+
+
+def _run_child(name):
+    proc = subprocess.run(
+        [sys.executable, "-c", _CHILD, name, SF_SMOKE],
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    return proc.returncode, proc.stdout, proc.stderr
+
+
 @pytest.fixture(scope="module")
 def fresh_results():
-    """All 10 child sessions run CONCURRENTLY (each is its own JVM on a
-    32-core box; serial children cost ~5.5 min of suite wall, concurrent
-    ~1 min). Each child is still a fully fresh session in which its
+    """One child session per consumer, at most ``_WINDOW`` running at
+    a time.  Each child is still a fully fresh session in which its
     query runs FIRST — concurrency is between processes, never inside
     one."""
-    procs = {
-        name: subprocess.Popen(
-            [sys.executable, "-c", _CHILD, name, SF_SMOKE],
-            stdout=subprocess.PIPE,
-            stderr=subprocess.PIPE,
-            text=True,
-        )
-        for name in CONSUMERS
-    }
-    out = {}
-    for name, proc in procs.items():
-        stdout, stderr = proc.communicate(timeout=300)
-        out[name] = (proc.returncode, stdout, stderr)
-    return out
+    with ThreadPoolExecutor(max_workers=_WINDOW) as pool:
+        return dict(zip(CONSUMERS, pool.map(_run_child, CONSUMERS)))
 
 
 @pytest.mark.parametrize("name", CONSUMERS)

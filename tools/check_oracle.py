@@ -18,7 +18,7 @@ sys.path.insert(0, "/root/repo")
 
 import duckdb  # noqa: E402
 
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+from data_engineering_examples_spark.sources.tables import TABLES  # noqa: E402
 
 
 def duck_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:

@@ -1,7 +1,7 @@
 """Audit every registered query's physical plan and write PLANS.md.
 
-For each of the 55 registered queries this captures scale-relevant plan
-facts: exchange count, broadcast/shuffle-join mix, whether filters reached
+For each registered query this captures scale-relevant plan facts:
+exchange count, broadcast/shuffle-join mix, whether filters reached
 the scan (PushedFilters / PartitionFilters), whole-stage-codegen spans,
 Python (Arrow) stages, and red flags (CartesianProduct, row-at-a-time
 BatchEvalPython). ``tests/test_plan_invariants.py`` enforces the hard

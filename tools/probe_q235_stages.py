@@ -201,7 +201,7 @@ def staged_check(spark, sf_dir: str, verbose: bool = False) -> list:
         "nrm", F.sqrt(sq._dot(F.col("e"), F.col("e")))
     )
     m = materialize(final.join(vn, "vec_id"), "probe235_assign")
-    e_spark = {(r.u, r.v) for r in sq._semdedup_edges_arrow(m, sq.SEMDEDUP_COS).collect()}
+    e_spark = {(r.u, r.v) for r in sq._semdedup_edges(m, sq.SEMDEDUP_COS).collect()}
     e_duck = {
         (r[0], r[1])
         for r in con.execute(

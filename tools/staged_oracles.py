@@ -38,17 +38,7 @@ sys.path.insert(0, "/root/repo")
 
 import duckdb  # noqa: E402
 
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
-
-
-def _connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    return con
+from check_oracle import duck_connect  # noqa: E402
 
 
 # --- q95: step-materialized integer PageRank --------------------------------
@@ -71,7 +61,7 @@ def staged_q95(spark, sf_dir: str) -> list:
         q95_neardup_pagerank,
     )
 
-    con = _connect(sf_dir)
+    con = duck_connect(sf_dir)
     con.execute(
         f"""CREATE TEMP TABLE t_edges AS
         WITH {_duck_minhash_bands_cte()}
@@ -142,7 +132,7 @@ def staged_q210(spark, sf_dir: str) -> list:
     from data_engineering_examples_spark.plans.analytics import q210_pareto_frontier
 
     pdf = q210_pareto_frontier(spark, sf_dir).toPandas()
-    con = _connect(sf_dir)
+    con = duck_connect(sf_dir)
     con.register("r_raw", pdf)
     con.execute(
         "CREATE TEMP TABLE r AS SELECT CAST(o_orderkey AS BIGINT) AS o_orderkey, "
@@ -233,7 +223,7 @@ _STAGED_TABLES: dict = {}
 
 def _stage_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
     if sf_dir not in _STAGE_CONS:
-        _STAGE_CONS[sf_dir] = _connect(sf_dir)
+        _STAGE_CONS[sf_dir] = duck_connect(sf_dir)
         _STAGED_TABLES[sf_dir] = set()
     return _STAGE_CONS[sf_dir]
 
