@@ -8,12 +8,13 @@ SURVEY.md §2 registers a (Spark callable, DuckDB oracle SQL) pair there.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from data_engineering_examples_spark.plans import all_specs  # noqa: E402
 

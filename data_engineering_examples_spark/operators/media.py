@@ -13,11 +13,12 @@ decoding libraries (PIL/opencv) are NOT installed, so
   for the formats a pure-Python parser can own — 24-bit BI_RGB BMP,
   binary P6 PPM, 8-bit PNG — non-interlaced AND Adam7-interlaced
   (stdlib zlib inflate + per-scanline unfilter + §8.2 deinterlace,
-  r10) — and baseline sequential JPEG (from-the-spec
-  T.81 Huffman + IDCT decode: 4:4:4/4:2:2/4:2:0/grayscale, restart
-  markers), progressive JPEG, and lossless WebP (VP8L, r11) — and
-  raise ``NotImplementedError`` for anything else (arithmetic JPEG,
-  lossy-VP8 WebP, …) unless a decoder is injected;
+  r10) — JPEG, sequential and progressive, through one multi-scan
+  decoder (from-the-spec T.81 Huffman + IDCT decode: interleaved and
+  per-component scans, 4:4:4/4:2:2/4:2:0/grayscale, restart markers),
+  and lossless WebP (VP8L, r11) — and raise ``NotImplementedError`` for
+  anything else (lossless/hierarchical/arithmetic JPEG, lossy-VP8 WebP,
+  …) unless a decoder is injected;
 * ``extract_features`` runs a real ``mapInPandas`` pipeline with a
   deterministic byte-histogram featurizer standing in for a model
   embedding — the Arrow batch shape, schema handling, and partitioning
@@ -289,15 +290,15 @@ def _decode_png(payload: bytes) -> DecodedImage:
     return DecodedImage(width, height, bytes(out))
 
 
-# --- JPEG (baseline sequential DCT, ITU-T T.81) ----------------------------
+# --- JPEG (Huffman-coded DCT, ITU-T T.81) ----------------------------------
 #
-# A from-the-spec pure-Python decoder for the profile every camera and
-# web encoder emits by default: baseline sequential, Huffman-coded,
-# 8-bit, any sampling factors up to 2x2 (4:4:4 / 4:2:2 / 4:2:0 /
-# grayscale), with restart-marker support.  Progressive (SOF2) and
-# arithmetic-coded streams still raise and remain the injection seam.
-# Throughput is Python-speed — the production path injects a codec —
-# but the format itself is no longer a stub: fixture corpora round-trip
+# A from-the-spec pure-Python decoder for the profiles camera and web
+# encoders emit: sequential (SOF0 baseline, SOF1 extended) and
+# progressive (SOF2), 8-bit, any sampling factors up to 2x2 (4:4:4 /
+# 4:2:2 / 4:2:0 / grayscale), with restart-marker support.  Lossless,
+# hierarchical and arithmetic-coded frames raise NotImplementedError and
+# remain the injection seam.  Throughput is Python-speed — the
+# production path injects a codec — but fixture corpora round-trip
 # through decode_image with zero dependencies.
 
 #: zigzag scan position -> natural (row-major) coefficient index
@@ -428,162 +429,6 @@ def _jpeg_extend(v: int, t: int) -> int:
     return v - (1 << t) + 1 if v < (1 << (t - 1)) else v
 
 
-def _decode_jpeg(payload: bytes) -> DecodedImage:
-    """Baseline sequential JPEG -> RGB (T.81 Annex F decode procedure)."""
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG payload")
-    pos = 2
-    qtabs: dict[int, list[int]] = {}  # id -> 64 values in zigzag order
-    huff_dc: dict[int, dict] = {}
-    huff_ac: dict[int, dict] = {}
-    frame = None  # (height, width, [(cid, h, v, tq), ...])
-    restart_interval = 0
-    scan = None
-    while pos + 1 < len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError(f"expected JPEG marker at offset {pos}")
-        # T.81 B.1.1.2: any number of 0xFF fill bytes may precede a
-        # marker code (camera firmwares pad with them); the marker byte
-        # is the first non-0xFF after the run.
-        while pos + 1 < len(payload) and payload[pos + 1] == 0xFF:
-            pos += 1
-        marker = payload[pos + 1]
-        pos += 2
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            continue
-        if marker == 0xD9:  # EOI
-            break
-        seglen = int.from_bytes(payload[pos : pos + 2], "big")
-        seg = payload[pos + 2 : pos + seglen]
-        if marker == 0xDB:  # DQT (possibly several tables)
-            i = 0
-            while i < len(seg):
-                pq, tq = seg[i] >> 4, seg[i] & 15
-                i += 1
-                if pq:  # 16-bit precision
-                    qtabs[tq] = [
-                        int.from_bytes(seg[i + 2 * k : i + 2 * k + 2], "big")
-                        for k in range(64)
-                    ]
-                    i += 128
-                else:
-                    qtabs[tq] = list(seg[i : i + 64])
-                    i += 64
-        elif marker == 0xC4:  # DHT (possibly several tables)
-            i = 0
-            while i < len(seg):
-                tc, th = seg[i] >> 4, seg[i] & 15
-                counts = seg[i + 1 : i + 17]
-                n = sum(counts)
-                symbols = seg[i + 17 : i + 17 + n]
-                (huff_ac if tc else huff_dc)[th] = _jpeg_build_huffman(
-                    counts, symbols
-                )
-                i += 17 + n
-        elif marker in (0xC0, 0xC1):  # SOF0 baseline / SOF1 ext. sequential
-            if seg[0] != 8:
-                raise NotImplementedError("only 8-bit JPEG is supported")
-            height = int.from_bytes(seg[1:3], "big")
-            width = int.from_bytes(seg[3:5], "big")
-            ncomp = seg[5]
-            comps = []
-            for c in range(ncomp):
-                cid, hv, tq = seg[6 + 3 * c : 9 + 3 * c]
-                comps.append((cid, hv >> 4, hv & 15, tq))
-            frame = (height, width, comps)
-        elif marker == 0xC2:  # SOF2: hand the whole stream to the
-            return _decode_jpeg_progressive(payload)  # multi-scan path
-        elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            raise NotImplementedError(
-                f"JPEG SOF marker 0x{marker:02X} (non-baseline) not supported"
-            )
-        elif marker == 0xDD:  # DRI
-            restart_interval = int.from_bytes(seg[0:2], "big")
-        elif marker == 0xDA:  # SOS — entropy-coded data follows the segment
-            ns = seg[0]
-            scan = [
-                (seg[1 + 2 * c], seg[2 + 2 * c] >> 4, seg[2 + 2 * c] & 15)
-                for c in range(ns)
-            ]
-            pos += seglen
-            break
-        pos += seglen
-    if frame is None or scan is None:
-        raise ValueError("JPEG missing SOF or SOS")
-
-    height, width, comps = frame
-    if not (0 < width and 0 < height):
-        raise ValueError(f"invalid JPEG dimensions {width}x{height}")
-    by_id = {cid: (h, v, tq) for cid, h, v, tq in comps}
-    hmax = max(h for _, h, _, _ in comps)
-    vmax = max(v for _, _, v, _ in comps)
-    if hmax > 2 or vmax > 2:
-        raise NotImplementedError("JPEG sampling factors above 2 not supported")
-    mcux = (width + 8 * hmax - 1) // (8 * hmax)
-    mcuy = (height + 8 * vmax - 1) // (8 * vmax)
-    planes: dict[int, bytearray] = {}
-    strides: dict[int, int] = {}
-    for cid, h, v, _ in comps:
-        strides[cid] = mcux * h * 8
-        planes[cid] = bytearray(strides[cid] * mcuy * v * 8)
-
-    reader = _JpegBitReader(payload, pos)
-    pred = {cid: 0 for cid, _, _, _ in comps}
-    mcu_count = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and mcu_count and mcu_count % restart_interval == 0:
-                reader.byte_align()
-                if (
-                    reader.pos + 1 < len(payload)
-                    and payload[reader.pos] == 0xFF
-                    and 0xD0 <= payload[reader.pos + 1] <= 0xD7
-                ):
-                    reader.pos += 2
-                pred = {cid: 0 for cid, _, _, _ in comps}
-            for cid, td, ta in scan:
-                ch, cv, tq = by_id[cid]
-                q = qtabs[tq]
-                dc_tab, ac_tab = huff_dc[td], huff_ac[ta]
-                for byi in range(cv):
-                    for bxi in range(ch):
-                        t = _jpeg_huff_decode(reader, dc_tab)
-                        diff = (
-                            _jpeg_extend(reader.read_bits(t), t) if t else 0
-                        )
-                        pred[cid] += diff
-                        coef = [0.0] * 64
-                        coef[0] = pred[cid] * q[0]
-                        k = 1
-                        while k < 64:
-                            rs = _jpeg_huff_decode(reader, ac_tab)
-                            r, s = rs >> 4, rs & 15
-                            if s == 0:
-                                if r == 15:  # ZRL: 16 zeros
-                                    k += 16
-                                    continue
-                                break  # EOB
-                            k += r
-                            if k > 63:
-                                raise ValueError("JPEG AC index overrun")
-                            coef[_JPEG_ZIGZAG[k]] = (
-                                _jpeg_extend(reader.read_bits(s), s) * q[k]
-                            )
-                            k += 1
-                        pixels = _jpeg_idct_8x8(coef)
-                        plane, stride = planes[cid], strides[cid]
-                        x0 = (mx * ch + bxi) * 8
-                        y0 = (my * cv + byi) * 8
-                        for yy in range(8):
-                            row = (y0 + yy) * stride + x0
-                            plane[row : row + 8] = bytes(
-                                pixels[yy * 8 : yy * 8 + 8]
-                            )
-            mcu_count += 1
-
-    return _jpeg_planes_to_rgb(width, height, comps, planes, strides, hmax, vmax)
-
-
 def _jpeg_planes_to_rgb(
     width: int,
     height: int,
@@ -593,8 +438,8 @@ def _jpeg_planes_to_rgb(
     hmax: int,
     vmax: int,
 ) -> DecodedImage:
-    """Upsample component planes and convert (Y / YCbCr) to RGB —
-    shared by the baseline and progressive decode paths."""
+    """Upsample the decoded component planes and convert (Y / YCbCr)
+    to RGB."""
     out = bytearray(width * height * 3)
     if len(comps) == 1:
         cid = comps[0][0]
@@ -632,37 +477,52 @@ def _jpeg_planes_to_rgb(
     return DecodedImage(width, height, bytes(out))
 
 
-# --- progressive JPEG (SOF2, spectral selection + successive
-# approximation, ITU-T T.81 Annex G decode procedures) ----------------------
+# --- JPEG decode: one multi-scan path for both modes -----------------------
 #
-# The multi-scan path keeps a per-component COEFFICIENT buffer (zigzag
-# order, raw quantized values) that successive scans refine: a first DC
-# scan delivers DC >> Al, later DC scans append one bit per block; first
-# AC scans deliver a spectral band's coefficients at reduced precision
-# with EOB-RUN coding across blocks (symbols EOB0..EOB14), and AC
-# refinement scans append one correction bit to every already-nonzero
-# coefficient while inserting newly-nonzero ±1<<Al values.  Dequantize +
-# IDCT happen once, after EOI.  The refinement protocol (who receives a
-# correction bit, and when a ZRL run counts only zero-history positions)
-# follows T.81 G.1.2/G.2 exactly — the encoder twin in
-# tools/media_encoders.py:jpeg_encode_progressive emits the standard
-# 10-scan script and the round-trip test pins bit-exact pixel equality
-# with the baseline path at the same quantizer.
+# The decoder keeps a per-component COEFFICIENT buffer (zigzag order, raw
+# quantized values, MCU-padded block grid) that any number of scans fill;
+# dequantize + IDCT run once, after EOI.  The SOF marker sets the mode.
+# A sequential scan (SOF0/SOF1, T.81 Annex F) decodes DC and AC 1..63 of
+# each of its blocks in full.  Progressive scans (SOF2, Annex G) refine
+# the buffer: a first DC scan delivers DC >> Al, later DC scans append
+# one bit per block; first AC scans deliver a spectral band's
+# coefficients at reduced precision with EOB-RUN coding across blocks
+# (symbols EOB0..EOB14), and AC refinement scans append one correction
+# bit to every already-nonzero coefficient while inserting newly-nonzero
+# ±1<<Al values, following T.81 G.1.2/G.2 exactly.
+#
+# In either mode a scan walks one of two orders (T.81 A.2): an
+# interleaved scan (Ns > 1) the MCU-padded grid, a non-interleaved scan
+# (Ns = 1) the component's OWN unpadded block grid.  On a subsampled or
+# partial-MCU frame the two orders differ.  The encoder twins in
+# tools/media_encoders.py emit both orders in both modes, and the
+# round-trip tests pin bit-exact pixel equality between them.
+
+#: every SOFn marker (C4 DHT, C8 JPG and CC DAC are not frames)
+_JPEG_SOF = frozenset(range(0xC0, 0xD0)) - {0xC4, 0xC8, 0xCC}
 
 
-def _decode_jpeg_progressive(payload: bytes) -> DecodedImage:
+def _decode_jpeg(payload: bytes) -> DecodedImage:
+    """Sequential (SOF0/SOF1) or progressive (SOF2) JPEG -> RGB."""
+    if payload[:2] != b"\xff\xd8":
+        raise ValueError("not a JPEG payload")
     pos = 2
-    qtabs: dict[int, list[int]] = {}
+    qtabs: dict[int, list[int]] = {}  # id -> 64 values in zigzag order
     huff_dc: dict[int, dict] = {}
     huff_ac: dict[int, dict] = {}
-    frame = None
+    frame = None  # (height, width, [(cid, h, v, tq), ...])
+    progressive = False
     restart_interval = 0
+    n_scans = 0
     coefs: dict[int, list[list[int]]] = {}  # cid -> blocks of 64 zigzag ints
     geom: dict = {}
 
     while pos + 1 < len(payload):
         if payload[pos] != 0xFF:
             raise ValueError(f"expected JPEG marker at offset {pos}")
+        # T.81 B.1.1.2: any number of 0xFF fill bytes may precede a
+        # marker code (camera firmwares pad with them); the marker byte
+        # is the first non-0xFF after the run.
         while pos + 1 < len(payload) and payload[pos + 1] == 0xFF:
             pos += 1
         marker = payload[pos + 1]
@@ -673,12 +533,12 @@ def _decode_jpeg_progressive(payload: bytes) -> DecodedImage:
             break
         seglen = int.from_bytes(payload[pos : pos + 2], "big")
         seg = payload[pos + 2 : pos + seglen]
-        if marker == 0xDB:
+        if marker == 0xDB:  # DQT (possibly several tables)
             i = 0
             while i < len(seg):
                 pq, tq = seg[i] >> 4, seg[i] & 15
                 i += 1
-                if pq:
+                if pq:  # 16-bit precision
                     qtabs[tq] = [
                         int.from_bytes(seg[i + 2 * k : i + 2 * k + 2], "big")
                         for k in range(64)
@@ -687,7 +547,7 @@ def _decode_jpeg_progressive(payload: bytes) -> DecodedImage:
                 else:
                     qtabs[tq] = list(seg[i : i + 64])
                     i += 64
-        elif marker == 0xC4:  # tables may be redefined BETWEEN scans
+        elif marker == 0xC4:  # DHT; tables may be redefined BETWEEN scans
             i = 0
             while i < len(seg):
                 tc, th = seg[i] >> 4, seg[i] & 15
@@ -698,9 +558,17 @@ def _decode_jpeg_progressive(payload: bytes) -> DecodedImage:
                     counts, symbols
                 )
                 i += 17 + n
-        elif marker == 0xC2:
+        elif marker in _JPEG_SOF:
+            if frame is not None:
+                raise ValueError("JPEG stream with a second SOF")
+            if marker not in (0xC0, 0xC1, 0xC2):
+                raise NotImplementedError(
+                    f"JPEG SOF marker 0x{marker:02X} (lossless, hierarchical "
+                    "or arithmetic-coded) not supported"
+                )
             if seg[0] != 8:
                 raise NotImplementedError("only 8-bit JPEG is supported")
+            progressive = marker == 0xC2
             height = int.from_bytes(seg[1:3], "big")
             width = int.from_bytes(seg[3:5], "big")
             ncomp = seg[5]
@@ -726,30 +594,31 @@ def _decode_jpeg_progressive(payload: bytes) -> DecodedImage:
                 ch = -(-height * v // vmax)
                 geom[cid] = (bw, bh, -(-cw // 8), -(-ch // 8), h, v, tq)
             geom["_frame"] = (mcux, mcuy, hmax, vmax)
-        elif marker in (0xC0, 0xC1, 0xC3, 0xC5, 0xC6, 0xC7,
-                        0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            raise ValueError("mixed/invalid SOF in a progressive stream")
-        elif marker == 0xDD:
+        elif marker == 0xDD:  # DRI
             restart_interval = int.from_bytes(seg[0:2], "big")
-        elif marker == 0xDA:
+        elif marker == 0xDA:  # SOS — entropy-coded data follows the segment
             if frame is None:
-                raise ValueError("JPEG SOS before SOF2")
+                raise ValueError("JPEG SOS before SOF")
             ns = seg[0]
             scomps = [
                 (seg[1 + 2 * c], seg[2 + 2 * c] >> 4, seg[2 + 2 * c] & 15)
                 for c in range(ns)
             ]
-            ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
-            ah, al = seg[3 + 2 * ns] >> 4, seg[3 + 2 * ns] & 15
-            pos = _jpeg_prog_scan(
-                payload, pos + seglen, scomps, ss, se, ah, al,
+            if progressive:
+                ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
+                ah, al = seg[3 + 2 * ns] >> 4, seg[3 + 2 * ns] & 15
+            else:  # DC, then the full AC band 1..63 of every block
+                ss, se, ah, al = 1, 63, 0, 0
+            pos = _jpeg_scan(
+                payload, pos + seglen, progressive, scomps, ss, se, ah, al,
                 coefs, geom, huff_dc, huff_ac, restart_interval,
             )
+            n_scans += 1
             continue
         pos += seglen
 
-    if frame is None:
-        raise ValueError("progressive JPEG missing SOF2")
+    if not n_scans:  # no SOS (an SOS before any SOF raised above)
+        raise ValueError("JPEG missing SOF or SOS")
     height, width, comps = frame
     if not (0 < width and 0 < height):
         raise ValueError(f"invalid JPEG dimensions {width}x{height}")
@@ -776,9 +645,10 @@ def _decode_jpeg_progressive(payload: bytes) -> DecodedImage:
     return _jpeg_planes_to_rgb(width, height, comps, planes, strides, hmax, vmax)
 
 
-def _jpeg_prog_scan(
+def _jpeg_scan(
     payload: bytes,
     pos: int,
+    progressive: bool,
     scomps: list,
     ss: int,
     se: int,
@@ -790,8 +660,8 @@ def _jpeg_prog_scan(
     huff_ac: dict,
     restart_interval: int,
 ) -> int:
-    """Decode one progressive scan in place; returns the offset of the
-    next marker after the entropy-coded data."""
+    """Decode one scan into the coefficient buffer in place; returns the
+    offset of the next marker after the entropy-coded data."""
     reader = _JpegBitReader(payload, pos)
     mcux, mcuy, _hmax, _vmax = geom["_frame"]
     state = {"eobrun": 0, "pred": {cid: 0 for cid, _, _ in scomps}}
@@ -821,16 +691,18 @@ def _jpeg_prog_scan(
             rs = _jpeg_huff_decode(reader, huff_ac[ta])
             r, s = rs >> 4, rs & 15
             if s == 0:
-                if r == 15:
+                if r == 15:  # ZRL: 16 zeros
                     k += 16
                     continue
-                state["eobrun"] = (1 << r) - 1
-                if r:
-                    state["eobrun"] += reader.read_bits(r)
+                # EOB; progressive EOBn also covers the next blocks
+                if progressive:
+                    state["eobrun"] = (1 << r) - 1
+                    if r:
+                        state["eobrun"] += reader.read_bits(r)
                 break
             k += r
             if k > se:
-                raise ValueError("JPEG AC index overrun in progressive scan")
+                raise ValueError("JPEG AC index overrun")
             blk[k] = _jpeg_extend(reader.read_bits(s), s) << al
             k += 1
 
@@ -870,9 +742,7 @@ def _jpeg_prog_scan(
                         # match ac_first: a run that exhausts the band
                         # with a decoded coefficient still pending is a
                         # corrupt stream, never silently droppable
-                        raise ValueError(
-                            "JPEG AC index overrun in progressive scan"
-                        )
+                        raise ValueError("JPEG AC index overrun")
                     blk[k] = newval
                 k += 1
         if state["eobrun"] > 0:
@@ -881,6 +751,20 @@ def _jpeg_prog_scan(
                     _refine_one(blk, k)
                 k += 1
             state["eobrun"] -= 1
+
+    def decode_block(blk, cid, td, ta):
+        if not progressive:
+            dc_first(blk, cid, td)
+            ac_first(blk, ta)
+        elif ss == 0:
+            if ah == 0:
+                dc_first(blk, cid, td)
+            else:
+                dc_refine(blk)
+        elif ah == 0:
+            ac_first(blk, ta)
+        else:
+            ac_refine(blk, ta)
 
     def maybe_restart(unit_count):
         if (
@@ -898,58 +782,31 @@ def _jpeg_prog_scan(
             state["eobrun"] = 0
             state["pred"] = {cid: 0 for cid, _, _ in scomps}
 
-    if ss == 0:  # DC scan
-        if se != 0:
-            raise ValueError("DC scan must have Se = 0")
-        if len(scomps) == 1:
-            # Non-interleaved DC scan (Ns = 1): T.81 A.2.2 — the MCU is
-            # one data unit and the scan walks the component's OWN
-            # unpadded block grid, NOT the interleaved MCU-padded grid.
-            # On a subsampled multi-component frame the two orders
-            # differ, so routing this through the interleaved walk
-            # would decode to silently wrong pixels.
-            cid, td, _ta = scomps[0]
-            bw, _bh, ubw, ubh, _h, _v, _tq = geom[cid]
-            n = 0
-            for by in range(ubh):
-                for bx in range(ubw):
-                    maybe_restart(n)
-                    blk = coefs[cid][by * bw + bx]
-                    if ah == 0:
-                        dc_first(blk, cid, td)
-                    else:
-                        dc_refine(blk)
-                    n += 1
-        else:  # interleaved over the (padded) MCU grid
-            n = 0
-            for my in range(mcuy):
-                for mx in range(mcux):
-                    maybe_restart(n)
-                    for cid, td, _ta in scomps:
-                        bw, _bh, _ubw, _ubh, h, v, _tq = geom[cid]
-                        for byi in range(v):
-                            for bxi in range(h):
-                                bi = (my * v + byi) * bw + mx * h + bxi
-                                blk = coefs[cid][bi]
-                                if ah == 0:
-                                    dc_first(blk, cid, td)
-                                else:
-                                    dc_refine(blk)
-                    n += 1
-    else:  # AC scan: exactly one component, unpadded block grid
-        if len(scomps) != 1:
-            raise ValueError("progressive AC scan must be non-interleaved")
-        cid, _td, ta = scomps[0]
+    if progressive and ss == 0 and se != 0:
+        raise ValueError("DC scan must have Se = 0")
+    if progressive and ss != 0 and len(scomps) != 1:
+        raise ValueError("progressive AC scan must be non-interleaved")
+    n = 0
+    if len(scomps) == 1:
+        # Non-interleaved scan (Ns = 1): T.81 A.2.2 — the MCU is one data
+        # unit and the scan walks the component's OWN unpadded block grid.
+        cid, td, ta = scomps[0]
         bw, _bh, ubw, ubh, _h, _v, _tq = geom[cid]
-        n = 0
         for by in range(ubh):
             for bx in range(ubw):
                 maybe_restart(n)
-                blk = coefs[cid][by * bw + bx]
-                if ah == 0:
-                    ac_first(blk, ta)
-                else:
-                    ac_refine(blk, ta)
+                decode_block(coefs[cid][by * bw + bx], cid, td, ta)
+                n += 1
+    else:  # interleaved over the (padded) MCU grid
+        for my in range(mcuy):
+            for mx in range(mcux):
+                maybe_restart(n)
+                for cid, td, ta in scomps:
+                    bw, _bh, _ubw, _ubh, h, v, _tq = geom[cid]
+                    for byi in range(v):
+                        for bxi in range(h):
+                            bi = (my * v + byi) * bw + mx * h + bxi
+                            decode_block(coefs[cid][bi], cid, td, ta)
                 n += 1
 
     # position at the next true marker (skip entropy remainder + RSTs)
@@ -1314,14 +1171,16 @@ def decode_image(
 
     Executable without any external library for 24-bit BMP, binary PPM,
     8-bit PNG, non-interlaced and Adam7-interlaced (stdlib zlib +
-    scanline unfilter + deinterlace), both
-    JPEG DCT modes: baseline sequential (SOF0/1) and progressive (SOF2,
+    scanline unfilter + deinterlace), both Huffman JPEG DCT modes
+    through one multi-scan decoder — sequential (SOF0/1; one
+    interleaved scan or one scan per component) and progressive (SOF2,
     spectral selection + successive approximation with EOB-run and
     refinement-bit decoding) — 4:4:4/4:2:2/4:2:0/grayscale, restart
     markers, fill bytes — and lossless WebP (VP8L: canonical prefix
     codes, LZ77 + 2D distance map, color cache, subtract-green; r11).
-    Arithmetic-coded or hierarchical JPEG and lossy-VP8 WebP still
-    require an injected ``decoder`` (e.g. a PIL.Image.open wrapper) —
+    Lossless, hierarchical or arithmetic-coded JPEG (NotImplementedError
+    at the SOF) and lossy-VP8 WebP still require an injected
+    ``decoder`` (e.g. a PIL.Image.open wrapper) —
     and at production throughput a native codec should be injected for
     ALL formats; the stdlib decoders pin the semantics."""
     if decoder is not None:

@@ -1,3 +1,3 @@
-from .tables import TABLES, load_tables, register_views
+from .tables import TABLES, load_tables
 
-__all__ = ["TABLES", "load_tables", "register_views"]
+__all__ = ["TABLES", "load_tables"]

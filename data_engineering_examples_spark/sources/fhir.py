@@ -57,14 +57,13 @@ FHIR_TABLES = [
 
 
 def load_fhir_tables(
-    spark: SparkSession, names: list[str] | None = None, fixtures_dir: str | None = None
+    spark: SparkSession, names: list[str] | None = None
 ) -> dict[str, DataFrame]:
     """Lazy DataFrames for the FHIR fixture tables. Nothing is read until an
     action runs, so Catalyst pushes projections/predicates into the scan."""
-    base = fixtures_dir or FIXTURES_DIR
     out: dict[str, DataFrame] = {}
     for name in names or FHIR_TABLES:
-        path = os.path.join(base, f"{name}.parquet")
+        path = os.path.join(FIXTURES_DIR, f"{name}.parquet")
         if os.path.exists(path):
             out[name] = read_immutable_parquet(spark, path)
     return out

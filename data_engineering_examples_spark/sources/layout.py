@@ -93,7 +93,7 @@ def recover_swap(path: str) -> bool:
     return False
 
 
-def swap_write(df: DataFrame, path: str, partition_cols: list[str] | None = None) -> None:
+def swap_write(df: DataFrame, path: str) -> None:
     """Replace the parquet dataset at ``path`` with ``df`` using the
     write-new → move-old-aside → move-new-in → drop-old discipline.
 
@@ -118,10 +118,7 @@ def swap_write(df: DataFrame, path: str, partition_cols: list[str] | None = None
     for stale in (tmp, old):
         if os.path.exists(stale):
             shutil.rmtree(stale)
-    writer = df.write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(tmp)
+    df.write.mode("overwrite").parquet(tmp)
     if os.path.exists(path):
         os.rename(path, old)
     os.rename(tmp, path)
@@ -129,12 +126,7 @@ def swap_write(df: DataFrame, path: str, partition_cols: list[str] | None = None
         shutil.rmtree(old)
 
 
-def compact_parquet(
-    spark,
-    path: str,
-    target_mb: int = 256,
-    partition_cols: list[str] | None = None,
-) -> int:
+def compact_parquet(spark, path: str, target_mb: int = 256) -> int:
     """Rewrite a parquet dataset into ~``target_mb`` files (small-files
     compaction). Long-running ingestion — micro-batches, per-task state
     snapshots, streaming sinks — accretes thousands of tiny files; at
@@ -142,9 +134,7 @@ def compact_parquet(
     time. The rewrite goes through :func:`swap_write`, so a crash at any
     point is recoverable and reruns clean up leftovers.
 
-    Returns the ACTUAL number of files written (counted post-swap; with
-    ``partition_cols`` the repartition target multiplies across
-    partition directories, so the pre-computed target would undercount).
+    Returns the number of parquet files written, counted after the swap.
     """
     import math
     import os
@@ -157,7 +147,7 @@ def compact_parquet(
         if f.endswith(".parquet")
     )
     n_target = max(1, math.ceil(total_bytes / (target_mb * 1024 * 1024)))
-    swap_write(spark.read.parquet(path).repartition(n_target), path, partition_cols)
+    swap_write(spark.read.parquet(path).repartition(n_target), path)
     return sum(
         1
         for dp, _dn, fs in os.walk(path)

@@ -120,14 +120,6 @@ def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None
     return out
 
 
-def register_views(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:
-    """Register each table as a temp view (for the spark.sql query surface)."""
-    dfs = load_tables(spark, sf_dir, names)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs
-
-
 #: memo for scale_out's partition probe: logical-plan fingerprint →
 #: scan partition count. The probe (df.rdd.getNumPartitions) forces a
 #: plan→RDD conversion costing ~0.1-0.3s; every scale_out caller builds

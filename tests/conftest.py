@@ -1,10 +1,13 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+#: the checkout these tests belong to (a second checkout tests itself)
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 from data_engineering_examples_spark.session import get_spark
 

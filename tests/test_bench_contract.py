@@ -11,6 +11,10 @@ import os
 import subprocess
 import sys
 
+from .conftest import REPO_ROOT
+
+BENCH = os.path.join(REPO_ROOT, "bench.py")
+
 
 def test_bench_prints_one_json_line_with_contract_keys(tmp_path):
     env = dict(os.environ)
@@ -22,7 +26,7 @@ def test_bench_prints_one_json_line_with_contract_keys(tmp_path):
     # would overwrite the round's real full-record artifact.
     env["SPARK_GRAFT_BENCH_FULL_PATH"] = str(tmp_path / "full.json")
     out = subprocess.run(
-        [sys.executable, "/root/repo/bench.py"],
+        [sys.executable, BENCH],
         capture_output=True,
         text=True,
         env=env,
@@ -53,7 +57,7 @@ def test_bench_repeat_reports_median_and_spread(tmp_path):
     env["SPARK_GRAFT_CPUS"] = "4"
     env["SPARK_GRAFT_BENCH_FULL_PATH"] = str(tmp_path / "full.json")
     out = subprocess.run(
-        [sys.executable, "/root/repo/bench.py"],
+        [sys.executable, BENCH],
         capture_output=True,
         text=True,
         env=env,
@@ -87,7 +91,7 @@ def test_bench_substrate_builds_are_timed_entries(tmp_path):
     env["SPARK_GRAFT_BENCH_SUBSTRATES"] = "1"  # BENCH_ONLY defaults off
     env["SPARK_GRAFT_BENCH_FULL_PATH"] = str(tmp_path / "full.json")
     out = subprocess.run(
-        [sys.executable, "/root/repo/bench.py"],
+        [sys.executable, BENCH],
         capture_output=True,
         text=True,
         env=env,
@@ -129,7 +133,7 @@ def test_shape_stdout_fits_driver_tail_budget():
             for n, s in queries.items()
         },
     }
-    line = bench.shape_stdout(out, "/root/repo/bench_snapshots/last_run_full.json")
+    line = bench.shape_stdout(out, os.path.join(REPO_ROOT, "bench_snapshots/last_run_full.json"))
     assert len(line) <= bench.STDOUT_BUDGET
     rec = json.loads(line)
     assert set(rec) >= {"metric", "value", "unit", "queries", "sf"}

@@ -5,9 +5,6 @@ from __future__ import annotations
 
 import datetime
 import json
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 

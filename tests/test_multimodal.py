@@ -492,6 +492,56 @@ def test_builtin_jpeg_progressive_noninterleaved_dc_scans():
         assert prog.pixels == base.pixels, (w, h, kw)
 
 
+def test_builtin_jpeg_noninterleaved_sequential_scans():
+    """A sequential frame may carry one Ns=1 scan per component (T.81
+    A.2.2), each walking the component's own unpadded block grid.  The
+    decode must be bit-identical to the one interleaved scan's, also on
+    4:2:0 frames with partial MCUs (where the two walks differ) and
+    with a restart marker after every block."""
+    cases = [
+        (17, 23, {}),
+        (18, 10, {"subsample": True}),
+        (15, 9, {"gray": True}),
+        (18, 10, {"subsample": True, "restart": 1}),
+        (17, 23, {"restart": 1}),
+    ]
+    for w, h, kw in cases:
+        n = w * h if kw.get("gray") else w * h * 3
+        rgb = bytes((i * 2654435761) % 256 for i in range(n))
+        one = decode_image(_jpeg_encode(rgb, w, h, **kw))
+        per_comp = _jpeg_encode(rgb, w, h, noninterleaved=True, **kw)
+        assert per_comp.count(b"\xff\xda") == (1 if kw.get("gray") else 3)
+        img = decode_image(per_comp)
+        assert (img.width, img.height) == (w, h)
+        assert img.pixels == one.pixels, (w, h, kw)
+
+
+def _jpeg_segment(payload: bytes, marker: int) -> bytes:
+    """The first marker segment of ``payload`` with this marker code."""
+    i = payload.index(bytes([0xFF, marker]))
+    return payload[i : i + 2 + int.from_bytes(payload[i + 2 : i + 4], "big")]
+
+
+def test_jpeg_error_contract():
+    """Unsupported frame kinds raise NotImplementedError (the injected-
+    decoder seam, ``decode_ok=false`` in q222); malformed frame/scan
+    structure raises ValueError instead of decoding to flat grey."""
+    payload = _jpeg_encode(_gradient_rgb(8, 8), 8, 8)
+    sof = _jpeg_segment(payload, 0xC0)
+    for kind in (0xC3, 0xC9):  # lossless, arithmetic-coded sequential
+        with pytest.raises(NotImplementedError):
+            decode_image(payload.replace(sof, sof[:1] + bytes([kind]) + sof[2:]))
+    sos_at = payload.index(_jpeg_segment(payload, 0xDA))
+    malformed = [
+        (payload[:sos_at] + b"\xff\xd9", "missing SOF or SOS"),
+        (payload.replace(sof, b"")[:-2] + sof + b"\xff\xd9", "SOS before SOF"),
+        (payload.replace(sof, sof + sof), "second SOF"),
+    ]
+    for bad, message in malformed:
+        with pytest.raises(ValueError, match=message):
+            decode_image(bad)
+
+
 def test_builtin_jpeg_progressive_long_eob_runs():
     """A uniform image makes every AC band all-zero: the whole scan is
     one EOB run per pass, and refinement passes exercise the

@@ -3,11 +3,7 @@ with an oracle must match DuckDB on row count, column names, and values."""
 
 from __future__ import annotations
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from data_engineering_examples_spark.plans import all_specs
 from tools.check_oracle import compare, duck_connect

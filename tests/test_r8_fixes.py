@@ -10,11 +10,7 @@
 
 from __future__ import annotations
 
-import sys
-
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 from data_engineering_examples_spark.operators.media import decode_image
 from data_engineering_examples_spark.plans import all_specs

@@ -30,7 +30,7 @@ import pytest
 
 from data_engineering_examples_spark.plans import all_specs
 
-from .conftest import SF_SMOKE
+from .conftest import REPO_ROOT, SF_SMOKE
 
 #: One consumer per distinct (substrate, consumer-shape) edge: direct
 #: builders, cross-module composers, and the deepest chains (q256 reads
@@ -78,7 +78,7 @@ CONSUMERS = [
 
 _CHILD = """
 import sys, json
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[3])
 from pyspark.sql import SparkSession
 
 spark = (
@@ -110,7 +110,7 @@ _WINDOW = max(1, (os.cpu_count() or 1) // 2)
 
 def _run_child(name):
     proc = subprocess.run(
-        [sys.executable, "-c", _CHILD, name, SF_SMOKE],
+        [sys.executable, "-c", _CHILD, name, SF_SMOKE, REPO_ROOT],
         capture_output=True,
         text=True,
         timeout=300,

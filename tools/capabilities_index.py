@@ -6,14 +6,16 @@ the complementary index for everything the engine does BEYOND §2 —
 LLM-pipeline components, storage layout, streaming, governance — so a
 reader can find "what's the near-dup story" without grepping plans/.
 
-Usage: python tools/capabilities_index.py   (writes /root/repo/CAPABILITIES.md)
+Usage: python tools/capabilities_index.py   (writes CAPABILITIES.md at the repo root)
 """
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from data_engineering_examples_spark.plans import all_specs  # noqa: E402
 
@@ -79,7 +81,7 @@ def main() -> None:
         lines.append("")
     lines.append("Legend: `•` = in the driver's 50-query hash-check window; "
                  "`·` = verified by the local full-registry oracle run.")
-    out = "/root/repo/CAPABILITIES.md"
+    out = os.path.join(ROOT, "CAPABILITIES.md")
     # hand-maintained appendix sections (## Appendix: ...) survive
     # regeneration — e.g. the L4 narrative inventory moved out of the
     # README's Layout table (r12)

@@ -8,7 +8,7 @@ T*, X*), collect:
 * source files whose docstrings/comments cite the ID,
 * test files that cite the ID.
 
-Usage: python tools/coverage_matrix.py   (writes /root/repo/COVERAGE.md)
+Usage: python tools/coverage_matrix.py   (writes COVERAGE.md at the repo root)
 """
 
 from __future__ import annotations
@@ -17,9 +17,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
-
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 SRC_DIRS = ["data_engineering_examples_spark", "tests"]
 ID_RE = re.compile(r"^\| (?P<id>[SPJAWFUTX]\d+) \| (?P<name>[^|]+) \|")
 

@@ -3,8 +3,8 @@
 Generates the healthcare-side test inputs the driver's TPC-H-ish tables
 can't provide: a bronze ``resources`` document store, the per-type search
 projections (mirroring the reference's ``HSFHIR_X0001_S.*`` tables), NHS
-ODS master CSVs, and workflow tables. Written once to ``/root/repo/fixtures``
-and committed; every byte derives from ``random.Random(FIXED_SEED)`` so
+ODS master CSVs, and workflow tables. Written once to the repo's
+``fixtures/`` directory and committed; every byte derives from ``random.Random(FIXED_SEED)`` so
 regeneration is reproducible.
 
 Run: ``python tools/gen_fixtures.py``

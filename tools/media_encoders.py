@@ -2,23 +2,28 @@
 
 The engine only ever DECODES (operators/media.py); these encoders exist
 so the fixture corpus can carry REAL payloads in every format the
-stdlib decoders own — BMP/PPM/PNG/WAV/baseline-JPEG — with metadata
+stdlib decoders own — BMP/PPM/PNG/WAV/JPEG — with metadata
 columns (width/height/duration_ms) that provably match the bytes.  That
 makes a decode-from-bytes vs declared-metadata cross-check possible as
 an oracle query (plans/multimodal_queries.py q222/q223).
 
-The JPEG encoder is intentionally minimal (T.81 baseline): uniform
-quantization table, custom fixed-length canonical Huffman tables (12 DC
-symbols @ 4 bits, 162 AC symbols @ 8 bits — Kraft-valid, no all-ones
-code), 4:4:4 or 4:2:0 chroma, optional restart interval, optional
-single-component grayscale.  Non-standard tables are a feature: the
-decoder must honor whatever DHT/DQT the stream declares.
+The JPEG encoders are intentionally minimal and share one pipeline
+(colour conversion, box subsampling, FDCT, quantization, bit writer):
+uniform quantization table, custom fixed-length canonical Huffman
+tables (12 DC symbols @ 4 bits, every AC symbol @ 8 bits — Kraft-valid,
+no all-ones code), 4:4:4 or 4:2:0 chroma, optional single-component
+grayscale.  ``jpeg_encode`` writes baseline sequential streams (one
+interleaved scan, or one scan per component; optional restart
+interval), ``jpeg_encode_progressive`` the standard progressive script.
+Non-standard tables are a feature: the decoder must honor whatever
+DHT/DQT the stream declares.
 """
 
 from __future__ import annotations
 
 import struct
 import zlib
+from typing import NamedTuple
 
 from data_engineering_examples_spark.operators.media import (  # noqa: F401
     _JPEG_M,
@@ -315,29 +320,62 @@ def wav_encode(frames: list[int], rate: int = 8000, n_ch: int = 1) -> bytes:
     )
 
 
-def jpeg_encode(
-    rgb: bytes,
-    w: int,
-    h: int,
-    subsample: bool = False,
-    q: int = 1,
-    restart: int = 0,
-    gray: bool = False,
-) -> bytes:
-    """Baseline sequential JPEG (T.81); see module docstring."""
+def _fdct(block: list[float]) -> list[float]:
+    """64 level-shifted samples -> 64 DCT coefficients (row-major)."""
+    tmp = [
+        [sum(_JPEG_M[u][x] * block[y * 8 + x] for x in range(8)) for u in range(8)]
+        for y in range(8)
+    ]
+    out = [0.0] * 64
+    for u in range(8):
+        col = [tmp[y][u] for y in range(8)]
+        for v in range(8):
+            out[v * 8 + u] = sum(_JPEG_M[v][y] * col[y] for y in range(8))
+    return out
 
-    def fdct(block):  # 64 level-shifted floats -> 64 coefficients
-        tmp = [
-            [sum(_JPEG_M[u][x] * block[y * 8 + x] for x in range(8)) for u in range(8)]
-            for y in range(8)
-        ]
-        out = [0.0] * 64
-        for u in range(8):
-            col = [tmp[y][u] for y in range(8)]
-            for v in range(8):
-                out[v * 8 + u] = sum(_JPEG_M[v][y] * col[y] for y in range(8))
-        return out
 
+def _mag_bits(v: int) -> int:
+    """T.81 magnitude category: the bit length of ``|v|``."""
+    return abs(v).bit_length()
+
+
+class _JpegFrame(NamedTuple):
+    """Quantized coefficients of one frame, shared by both JPEG encoders."""
+
+    samp: list  # (h, v) sampling factors per component
+    mcux: int
+    mcuy: int
+    grid: list  # per component: (bw, bh, unpadded bw, unpadded bh)
+    blocks: list  # per component: zigzag int blocks, MCU-padded grid
+
+    def scan_units(self, comp_ids: list) -> list:
+        """T.81 A.2 scan order as MCUs of ``(component, block index)``:
+        a non-interleaved scan (Ns = 1) walks the component's own
+        unpadded block grid, one block per MCU; an interleaved scan the
+        MCU-padded grid."""
+        if len(comp_ids) == 1:
+            ci = comp_ids[0]
+            bw, _bh, ubw, ubh = self.grid[ci]
+            return [[(ci, by * bw + bx)] for by in range(ubh) for bx in range(ubw)]
+        units = []
+        for my in range(self.mcuy):
+            for mx in range(self.mcux):
+                mcu = []
+                for ci in comp_ids:
+                    hi, vi = self.samp[ci]
+                    bw = self.grid[ci][0]
+                    for byi in range(vi):
+                        for bxi in range(hi):
+                            mcu.append((ci, (my * vi + byi) * bw + mx * hi + bxi))
+                units.append(mcu)
+        return units
+
+
+def _jpeg_frame(
+    rgb: bytes, w: int, h: int, subsample: bool, q: int, gray: bool
+) -> _JpegFrame:
+    """Colour conversion, optional 2x2 box subsampling of chroma, FDCT
+    and uniform quantization of every block (edge-replicated padding)."""
     if gray:
         planes = [[rgb[i] for i in range(w * h)]]
         samp = [(1, 1)]
@@ -379,124 +417,142 @@ def jpeg_encode(
     vmax = max(s[1] for s in samp)
     mcux = (w + 8 * hmax - 1) // (8 * hmax)
     mcuy = (h + 8 * vmax - 1) // (8 * vmax)
-    dims = [(-(-w * hi // hmax), -(-h * vi // vmax)) for hi, vi in samp]
+    grid, blocks = [], []
+    for plane, (hi, vi) in zip(planes, samp):
+        cw, chh = -(-w * hi // hmax), -(-h * vi // vmax)
+        bw, bh = mcux * hi, mcuy * vi
+        grid.append((bw, bh, -(-cw // 8), -(-chh // 8)))
+        comp_blocks = []
+        for by in range(bh):
+            for bx in range(bw):
+                block = [
+                    plane[min(chh - 1, by * 8 + yy) * cw + min(cw - 1, bx * 8 + xx)]
+                    - 128.0
+                    for yy in range(8)
+                    for xx in range(8)
+                ]
+                coef = _fdct(block)
+                comp_blocks.append([round(coef[_JPEG_ZIGZAG[k]] / q) for k in range(64)])
+        blocks.append(comp_blocks)
+    return _JpegFrame(samp, mcux, mcuy, grid, blocks)
 
-    qtab = [q] * 64
-    dc_syms = list(range(12))
-    ac_syms = [r << 4 | s for r in range(16) for s in range(1, 11)] + [0x00, 0xF0]
-    dc_counts = [0] * 16
-    dc_counts[3] = 12  # all DC symbols at code length 4
-    ac_counts = [0] * 16
-    ac_counts[7] = 162  # all AC symbols at code length 8
-    dc_code = {sym: (i, 4) for i, sym in enumerate(dc_syms)}
-    ac_code = {sym: (i, 8) for i, sym in enumerate(ac_syms)}
 
-    out = bytearray(b"\xff\xd8")
+class _JpegWriter:
+    """JPEG byte stream: marker segments plus an MSB-first entropy-coded
+    bit writer with 0xFF -> 0xFF00 byte stuffing."""
 
-    def seg(marker, body):
-        out.extend(bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body)
+    def __init__(self) -> None:
+        self.out = bytearray(b"\xff\xd8")
+        self.acc = 0
+        self.n = 0
 
-    seg(0xDB, bytes([0]) + bytes(qtab))
-    ncomp = len(planes)
-    sof = bytes([8]) + struct.pack(">HH", h, w) + bytes([ncomp])
-    for i, (hi, vi) in enumerate(samp):
-        sof += bytes([i + 1, hi << 4 | vi, 0])
-    seg(0xC0, sof)
-    seg(0xC4, bytes([0x00]) + bytes(dc_counts) + bytes(dc_syms))
-    seg(0xC4, bytes([0x10]) + bytes(ac_counts) + bytes(ac_syms))
-    if restart:
-        seg(0xDD, struct.pack(">H", restart))
-    sos = bytes([ncomp])
-    for i in range(ncomp):
-        sos += bytes([i + 1, 0x00])
-    sos += bytes([0, 63, 0])
-    seg(0xDA, sos)
+    def seg(self, marker: int, body: bytes) -> None:
+        self.out += bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
 
-    acc = [0, 0]  # bit accumulator, bit count
-
-    def put(v, n):
+    def put(self, v: int, n: int) -> None:
         for i in range(n - 1, -1, -1):
-            acc[0] = (acc[0] << 1) | ((v >> i) & 1)
-            acc[1] += 1
-            if acc[1] == 8:
-                out.append(acc[0])
-                if acc[0] == 0xFF:
-                    out.append(0x00)
-                acc[0] = acc[1] = 0
+            self.acc = (self.acc << 1) | ((v >> i) & 1)
+            self.n += 1
+            if self.n == 8:
+                self.out.append(self.acc)
+                if self.acc == 0xFF:
+                    self.out.append(0x00)
+                self.acc = self.n = 0
 
-    def put_code(table, sym):
-        code, n = table[sym]
-        put(code, n)
+    def code(self, table: dict, sym: int) -> None:
+        self.put(*table[sym])
 
-    def mag_bits(v):
-        t, a = 0, abs(v)
-        while a:
-            t += 1
-            a >>= 1
-        return t
+    def mag(self, v: int, s: int) -> None:
+        """The ``s`` extra bits of a nonzero value (T.81 F.1.2.1)."""
+        self.put(v if v > 0 else v + (1 << s) - 1, s)
 
-    def sample(plane, cw, chh, x, y):  # edge-replicated padding
-        return plane[min(chh - 1, y) * cw + min(cw - 1, x)]
+    def flush(self) -> None:
+        while self.n:
+            self.put(1, 1)  # pad to a byte boundary with 1s
 
-    pred = [0] * ncomp
-    mcu_count = 0
-    rst = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart and mcu_count and mcu_count % restart == 0:
-                while acc[1]:
-                    put(1, 1)  # pad to byte boundary with 1s
-                out.extend(bytes([0xFF, 0xD0 + rst % 8]))
-                rst += 1
+    def header(self, sof: int, w: int, h: int, frame: _JpegFrame, q: int, ac_syms: list):
+        """DQT, SOF and the two fixed-length DHT tables (DC symbols
+        0..11 @ 4 bits, ``ac_syms`` @ 8 bits); returns the DC and AC
+        code tables."""
+        self.seg(0xDB, bytes([0]) + bytes([q] * 64))
+        sof_body = bytes([8]) + struct.pack(">HH", h, w) + bytes([len(frame.samp)])
+        for i, (hi, vi) in enumerate(frame.samp):
+            sof_body += bytes([i + 1, hi << 4 | vi, 0])
+        self.seg(sof, sof_body)
+        dc_counts, ac_counts = [0] * 16, [0] * 16
+        dc_counts[3], ac_counts[7] = 12, len(ac_syms)
+        self.seg(0xC4, bytes([0x00]) + bytes(dc_counts) + bytes(range(12)))
+        self.seg(0xC4, bytes([0x10]) + bytes(ac_counts) + bytes(ac_syms))
+        return (
+            {sym: (i, 4) for i, sym in enumerate(range(12))},
+            {sym: (i, 8) for i, sym in enumerate(ac_syms)},
+        )
+
+    def sos(self, comp_ids: list, ss: int, se: int, ah: int, al: int) -> None:
+        body = bytes([len(comp_ids)])
+        for ci in comp_ids:
+            body += bytes([ci + 1, 0x00])
+        self.seg(0xDA, body + bytes([ss, se, ah << 4 | al]))
+
+
+#: run/size AC symbols (runs 0..15, sizes 1..10)
+_AC_RUN_SIZE = [r << 4 | s for r in range(16) for s in range(1, 11)]
+
+
+def jpeg_encode(
+    rgb: bytes,
+    w: int,
+    h: int,
+    subsample: bool = False,
+    q: int = 1,
+    restart: int = 0,
+    gray: bool = False,
+    noninterleaved: bool = False,
+) -> bytes:
+    """Baseline sequential JPEG (T.81); see module docstring.  With
+    ``noninterleaved`` every component gets its own Ns=1 scan over its
+    own block grid (T.81 A.2.2) instead of one interleaved scan."""
+    frame = _jpeg_frame(rgb, w, h, subsample, q, gray)
+    wr = _JpegWriter()
+    dc_code, ac_code = wr.header(0xC0, w, h, frame, q, _AC_RUN_SIZE + [0x00, 0xF0])
+    if restart:
+        wr.seg(0xDD, struct.pack(">H", restart))
+    ncomp = len(frame.samp)
+    scans = [[ci] for ci in range(ncomp)] if noninterleaved else [list(range(ncomp))]
+    for comp_ids in scans:
+        wr.sos(comp_ids, 0, 63, 0, 0)
+        pred = [0] * ncomp
+        for n, mcu in enumerate(frame.scan_units(comp_ids)):
+            if restart and n and n % restart == 0:
+                wr.flush()
+                wr.out += bytes([0xFF, 0xD0 + (n // restart - 1) % 8])
                 pred = [0] * ncomp
-            for ci in range(ncomp):
-                hi, vi = samp[ci]
-                cw, chh = dims[ci]
-                for byi in range(vi):
-                    for bxi in range(hi):
-                        block = [
-                            sample(
-                                planes[ci],
-                                cw,
-                                chh,
-                                (mx * hi + bxi) * 8 + xx,
-                                (my * vi + byi) * 8 + yy,
-                            )
-                            - 128.0
-                            for yy in range(8)
-                            for xx in range(8)
-                        ]
-                        coef = fdct(block)
-                        zz = [
-                            round(coef[_JPEG_ZIGZAG[k]] / qtab[k]) for k in range(64)
-                        ]
-                        diff = zz[0] - pred[ci]
-                        pred[ci] = zz[0]
-                        t = mag_bits(diff)
-                        put_code(dc_code, t)
-                        if t:
-                            put(diff if diff > 0 else diff + (1 << t) - 1, t)
-                        run = 0
-                        last = max((k for k in range(1, 64) if zz[k]), default=0)
-                        for k in range(1, last + 1):
-                            if zz[k] == 0:
-                                run += 1
-                                continue
-                            while run > 15:
-                                put_code(ac_code, 0xF0)
-                                run -= 16
-                            s = mag_bits(zz[k])
-                            put_code(ac_code, run << 4 | s)
-                            v = zz[k]
-                            put(v if v > 0 else v + (1 << s) - 1, s)
-                            run = 0
-                        if last < 63:
-                            put_code(ac_code, 0x00)  # EOB
-            mcu_count += 1
-    while acc[1]:
-        put(1, 1)
-    out.extend(b"\xff\xd9")
-    return bytes(out)
+            for ci, bi in mcu:
+                zz = frame.blocks[ci][bi]
+                diff = zz[0] - pred[ci]
+                pred[ci] = zz[0]
+                t = _mag_bits(diff)
+                wr.code(dc_code, t)
+                if t:
+                    wr.mag(diff, t)
+                run = 0
+                last = max((k for k in range(1, 64) if zz[k]), default=0)
+                for k in range(1, last + 1):
+                    if zz[k] == 0:
+                        run += 1
+                        continue
+                    while run > 15:
+                        wr.code(ac_code, 0xF0)
+                        run -= 16
+                    s = _mag_bits(zz[k])
+                    wr.code(ac_code, run << 4 | s)
+                    wr.mag(zz[k], s)
+                    run = 0
+                if last < 63:
+                    wr.code(ac_code, 0x00)  # EOB
+        wr.flush()
+    wr.out += b"\xff\xd9"
+    return bytes(wr.out)
 
 
 def jpeg_encode_progressive(
@@ -518,242 +574,90 @@ def jpeg_encode_progressive(
     reconstruct EXACTLY the coefficients the baseline encoder would ship
     at the same quantizer, so the round-trip test compares pixels
     against the baseline decode bit-for-bit."""
-
-    def fdct(block):
-        tmp = [
-            [sum(_JPEG_M[u][x] * block[y * 8 + x] for x in range(8)) for u in range(8)]
-            for y in range(8)
-        ]
-        out = [0.0] * 64
-        for u in range(8):
-            col = [tmp[y][u] for y in range(8)]
-            for v in range(8):
-                out[v * 8 + u] = sum(_JPEG_M[v][y] * col[y] for y in range(8))
-        return out
-
-    if gray:
-        planes = [[rgb[i] for i in range(w * h)]]
-        samp = [(1, 1)]
-    else:
-        ys, cbs, crs = [], [], []
-        for i in range(w * h):
-            r, g, b = rgb[3 * i], rgb[3 * i + 1], rgb[3 * i + 2]
-            ys.append(min(255, max(0, round(0.299 * r + 0.587 * g + 0.114 * b))))
-            cbs.append(
-                min(255, max(0, round(128 - 0.168736 * r - 0.331264 * g + 0.5 * b)))
-            )
-            crs.append(
-                min(255, max(0, round(128 + 0.5 * r - 0.418688 * g - 0.081312 * b)))
-            )
-        if subsample:
-            cw, chh = (w + 1) // 2, (h + 1) // 2
-
-            def box(p):
-                out = []
-                for yy in range(chh):
-                    for xx in range(cw):
-                        acc = n = 0
-                        for dy in range(2):
-                            for dx in range(2):
-                                sy = min(h - 1, 2 * yy + dy)
-                                sx = min(w - 1, 2 * xx + dx)
-                                acc += p[sy * w + sx]
-                                n += 1
-                        out.append(round(acc / n))
-                return out
-
-            planes = [ys, box(cbs), box(crs)]
-            samp = [(2, 2), (1, 1), (1, 1)]
-        else:
-            planes = [ys, cbs, crs]
-            samp = [(1, 1), (1, 1), (1, 1)]
-
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
-    mcux = (w + 8 * hmax - 1) // (8 * hmax)
-    mcuy = (h + 8 * vmax - 1) // (8 * vmax)
-    dims = [(-(-w * hi // hmax), -(-h * vi // vmax)) for hi, vi in samp]
-    qtab = [q] * 64
-
-    def sample(plane, cw, chh, x, y):
-        return plane[min(chh - 1, y) * cw + min(cw - 1, x)]
-
-    # quantized zigzag coefficient blocks, MCU-padded grid per component
-    blocks: list[list[list[int]]] = []
-    bgrid: list[tuple[int, int, int, int]] = []  # bw, bh, unpadded bw/bh
-    for ci, (hi, vi) in enumerate(samp):
-        cw, chh = dims[ci]
-        bw, bh = mcux * hi, mcuy * vi
-        bgrid.append((bw, bh, -(-cw // 8), -(-chh // 8)))
-        comp_blocks = []
-        for by in range(bh):
-            for bx in range(bw):
-                block = [
-                    sample(planes[ci], cw, chh, bx * 8 + xx, by * 8 + yy) - 128.0
-                    for yy in range(8)
-                    for xx in range(8)
-                ]
-                coef = fdct(block)
-                comp_blocks.append(
-                    [round(coef[_JPEG_ZIGZAG[k]] / qtab[k]) for k in range(64)]
-                )
-        blocks.append(comp_blocks)
-
-    # tables: DC symbols 0..11 @4 bits; AC symbols = 160 run/size codes
-    # + EOB0..EOB14 + ZRL, all @8 bits (canonical, Kraft-valid)
-    dc_syms = list(range(12))
-    ac_syms = [r << 4 | s for r in range(16) for s in range(1, 11)] + [
-        r << 4 for r in range(15)
-    ] + [0xF0]
-    dc_counts = [0] * 16
-    dc_counts[3] = 12
-    ac_counts = [0] * 16
-    ac_counts[7] = len(ac_syms)
-    dc_code = {sym: (i, 4) for i, sym in enumerate(dc_syms)}
-    ac_code = {sym: (i, 8) for i, sym in enumerate(ac_syms)}
-
-    out = bytearray(b"\xff\xd8")
-
-    def seg(marker, body):
-        out.extend(bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body)
-
-    seg(0xDB, bytes([0]) + bytes(qtab))
-    ncomp = len(planes)
-    sof = bytes([8]) + struct.pack(">HH", h, w) + bytes([ncomp])
-    for i, (hi, vi) in enumerate(samp):
-        sof += bytes([i + 1, hi << 4 | vi, 0])
-    seg(0xC2, sof)
-    seg(0xC4, bytes([0x00]) + bytes(dc_counts) + bytes(dc_syms))
-    seg(0xC4, bytes([0x10]) + bytes(ac_counts) + bytes(ac_syms))
-
-    acc = [0, 0]
-
-    def put(v, n):
-        for i in range(n - 1, -1, -1):
-            acc[0] = (acc[0] << 1) | ((v >> i) & 1)
-            acc[1] += 1
-            if acc[1] == 8:
-                out.append(acc[0])
-                if acc[0] == 0xFF:
-                    out.append(0x00)
-                acc[0] = acc[1] = 0
-
-    def put_code(table, sym):
-        code, n = table[sym]
-        put(code, n)
-
-    def flush_bits():
-        while acc[1]:
-            put(1, 1)
-
-    def mag_bits(v):
-        t, a = 0, abs(v)
-        while a:
-            t += 1
-            a >>= 1
-        return t
-
-    def sos_header(comp_ids, ss, se, ah, al):
-        body = bytes([len(comp_ids)])
-        for ci in comp_ids:
-            body += bytes([ci + 1, 0x00])
-        body += bytes([ss, se, ah << 4 | al])
-        seg(0xDA, body)
+    frame = _jpeg_frame(rgb, w, h, subsample, q, gray)
+    blocks = frame.blocks
+    wr = _JpegWriter()
+    # AC symbols: the run/size codes + EOB0..EOB14 + ZRL
+    dc_code, ac_code = wr.header(
+        0xC2, w, h, frame, q, _AC_RUN_SIZE + [r << 4 for r in range(15)] + [0xF0]
+    )
+    put = wr.put
 
     def dc_scan(comp_ids, ah, al):
-        sos_header(comp_ids, 0, 0, ah, al)
+        wr.sos(comp_ids, 0, 0, ah, al)
         pred = {ci: 0 for ci in comp_ids}
+        for mcu in frame.scan_units(comp_ids):
+            for ci, bi in mcu:
+                zz0 = blocks[ci][bi][0]
+                if ah == 0:
+                    v = zz0 >> al  # arithmetic shift (T.81 DC)
+                    diff = v - pred[ci]
+                    pred[ci] = v
+                    t = _mag_bits(diff)
+                    wr.code(dc_code, t)
+                    if t:
+                        wr.mag(diff, t)
+                else:
+                    put((zz0 >> al) & 1, 1)
+        wr.flush()
 
-        def emit(ci, bi):
-            zz0 = blocks[ci][bi][0]
-            if ah == 0:
-                v = zz0 >> al  # arithmetic shift (T.81 DC)
-                diff = v - pred[ci]
-                pred[ci] = v
-                t = mag_bits(diff)
-                put_code(dc_code, t)
-                if t:
-                    put(diff if diff > 0 else diff + (1 << t) - 1, t)
-            else:
-                put((zz0 >> al) & 1, 1)
-
-        if len(comp_ids) == 1:
-            # Non-interleaved (Ns=1) scan: T.81 A.2.2 — walk the
-            # component's own UNPADDED block grid, not the MCU grid.
-            ci = comp_ids[0]
-            bw, _bh, ubw, ubh = bgrid[ci]
-            for by in range(ubh):
-                for bx in range(ubw):
-                    emit(ci, by * bw + bx)
-        else:
-            for my in range(mcuy):
-                for mx in range(mcux):
-                    for ci in comp_ids:
-                        hi, vi = samp[ci]
-                        bw = bgrid[ci][0]
-                        for byi in range(vi):
-                            for bxi in range(hi):
-                                emit(ci, (my * vi + byi) * bw + mx * hi + bxi)
-        flush_bits()
+    def comp_blocks(ci):  # a non-interleaved scan's blocks, in order
+        return [blocks[ci][mcu[0][1]] for mcu in frame.scan_units([ci])]
 
     def ac_first_scan(ci, ss, se, al):
-        sos_header([ci], ss, se, 0, al)
-        bw, _bh, ubw, ubh = bgrid[ci]
+        wr.sos([ci], ss, se, 0, al)
         eobrun = [0]
 
         def flush_eobrun():
             if eobrun[0]:
                 n = eobrun[0].bit_length() - 1
-                put_code(ac_code, n << 4)
+                wr.code(ac_code, n << 4)
                 if n:
                     put(eobrun[0] & ((1 << n) - 1), n)
                 eobrun[0] = 0
 
-        for by in range(ubh):
-            for bx in range(ubw):
-                zz = blocks[ci][by * bw + bx]
-                band = [
-                    (abs(zz[k]) >> al) * (1 if zz[k] >= 0 else -1)
-                    for k in range(ss, se + 1)
-                ]
-                last = max((i for i, v in enumerate(band) if v), default=-1)
-                if last < 0:
-                    eobrun[0] += 1
-                    if eobrun[0] == 0x7FFF:
-                        flush_eobrun()
+        for zz in comp_blocks(ci):
+            band = [
+                (abs(zz[k]) >> al) * (1 if zz[k] >= 0 else -1)
+                for k in range(ss, se + 1)
+            ]
+            last = max((i for i, v in enumerate(band) if v), default=-1)
+            if last < 0:
+                eobrun[0] += 1
+                if eobrun[0] == 0x7FFF:
+                    flush_eobrun()
+                continue
+            flush_eobrun()
+            r = 0
+            for i in range(last + 1):
+                v = band[i]
+                if v == 0:
+                    r += 1
                     continue
-                flush_eobrun()
+                while r > 15:
+                    wr.code(ac_code, 0xF0)
+                    r -= 16
+                s = _mag_bits(v)
+                wr.code(ac_code, r << 4 | s)
+                wr.mag(v, s)
                 r = 0
-                for i in range(last + 1):
-                    v = band[i]
-                    if v == 0:
-                        r += 1
-                        continue
-                    while r > 15:
-                        put_code(ac_code, 0xF0)
-                        r -= 16
-                    s = mag_bits(v)
-                    put_code(ac_code, r << 4 | s)
-                    put(v if v > 0 else v + (1 << s) - 1, s)
-                    r = 0
-                if last < se - ss:
-                    eobrun[0] += 1
-                    if eobrun[0] == 0x7FFF:
-                        flush_eobrun()
+            if last < se - ss:
+                eobrun[0] += 1
+                if eobrun[0] == 0x7FFF:
+                    flush_eobrun()
         flush_eobrun()
-        flush_bits()
+        wr.flush()
 
     def ac_refine_scan(ci, ss, se, ah):
         al = ah - 1
-        sos_header([ci], ss, se, ah, al)
-        bw, _bh, ubw, ubh = bgrid[ci]
+        wr.sos([ci], ss, se, ah, al)
         eobrun = [0]
         be_bits: list[int] = []  # correction bits pending with the EOB run
 
         def flush_eobrun():
             if eobrun[0]:
                 n = eobrun[0].bit_length() - 1
-                put_code(ac_code, n << 4)
+                wr.code(ac_code, n << 4)
                 if n:
                     put(eobrun[0] & ((1 << n) - 1), n)
                 eobrun[0] = 0
@@ -761,47 +665,45 @@ def jpeg_encode_progressive(
                 put(b, 1)
             be_bits.clear()
 
-        for by in range(ubh):
-            for bx in range(ubw):
-                zz = blocks[ci][by * bw + bx]
-                absv = [abs(zz[k]) >> al for k in range(ss, se + 1)]
-                # index (band-relative) of the last NEWLY-nonzero coef
-                eob = -1
-                for i, v in enumerate(absv):
-                    if v == 1:
-                        eob = i
-                r = 0
-                br: list[int] = []  # this block's pending correction bits
-                for i, temp in enumerate(absv):
-                    if temp == 0:
-                        r += 1
-                        continue
-                    while r > 15 and i <= eob:
-                        flush_eobrun()
-                        put_code(ac_code, 0xF0)
-                        r -= 16
-                        for b in br:
-                            put(b, 1)
-                        br = []
-                    if temp > 1:
-                        br.append(temp & 1)  # history coef: correction bit
-                        continue
+        for zz in comp_blocks(ci):
+            absv = [abs(zz[k]) >> al for k in range(ss, se + 1)]
+            # index (band-relative) of the last NEWLY-nonzero coef
+            eob = -1
+            for i, v in enumerate(absv):
+                if v == 1:
+                    eob = i
+            r = 0
+            br: list[int] = []  # this block's pending correction bits
+            for i, temp in enumerate(absv):
+                if temp == 0:
+                    r += 1
+                    continue
+                while r > 15 and i <= eob:
                     flush_eobrun()
-                    put_code(ac_code, r << 4 | 1)
-                    put(1 if zz[ss + i] >= 0 else 0, 1)
+                    wr.code(ac_code, 0xF0)
+                    r -= 16
                     for b in br:
                         put(b, 1)
                     br = []
-                    r = 0
-                if r > 0 or br:
-                    eobrun[0] += 1
-                    be_bits.extend(br)
-                    if eobrun[0] == 0x7FFF or len(be_bits) > 900:
-                        flush_eobrun()
+                if temp > 1:
+                    br.append(temp & 1)  # history coef: correction bit
+                    continue
+                flush_eobrun()
+                wr.code(ac_code, r << 4 | 1)
+                put(1 if zz[ss + i] >= 0 else 0, 1)
+                for b in br:
+                    put(b, 1)
+                br = []
+                r = 0
+            if r > 0 or br:
+                eobrun[0] += 1
+                be_bits.extend(br)
+                if eobrun[0] == 0x7FFF or len(be_bits) > 900:
+                    flush_eobrun()
         flush_eobrun()
-        flush_bits()
+        wr.flush()
 
-    if ncomp == 1:
+    if len(frame.samp) == 1:
         dc_scan([0], 0, 1)
         ac_first_scan(0, 1, 63, 2)
         ac_refine_scan(0, 1, 63, 2)
@@ -813,28 +715,21 @@ def jpeg_encode_progressive(
         # unpadded block order — on a subsampled frame this order
         # DIFFERS from the interleaved MCU walk, which is exactly the
         # decoder path the round-trip test needs to pin.
-        if dc_noninterleaved:
-            dc_scan([0], 0, 1)
-            dc_scan([1], 0, 1)
-            dc_scan([2], 0, 1)
-        else:
-            dc_scan([0, 1, 2], 0, 1)
+        dc_scans = [[0], [1], [2]] if dc_noninterleaved else [[0, 1, 2]]
+        for comp_ids in dc_scans:
+            dc_scan(comp_ids, 0, 1)
         ac_first_scan(0, 1, 5, 2)
         ac_first_scan(2, 1, 63, 1)
         ac_first_scan(1, 1, 63, 1)
         ac_first_scan(0, 6, 63, 2)
         ac_refine_scan(0, 1, 63, 2)
-        if dc_noninterleaved:
-            dc_scan([0], 1, 0)
-            dc_scan([1], 1, 0)
-            dc_scan([2], 1, 0)
-        else:
-            dc_scan([0, 1, 2], 1, 0)
+        for comp_ids in dc_scans:
+            dc_scan(comp_ids, 1, 0)
         ac_refine_scan(2, 1, 63, 1)
         ac_refine_scan(1, 1, 63, 1)
         ac_refine_scan(0, 1, 63, 1)
-    out.extend(b"\xff\xd9")
-    return bytes(out)
+    wr.out += b"\xff\xd9"
+    return bytes(wr.out)
 
 
 def mp4_encode(mdat: bytes, duration_ms: int) -> bytes:

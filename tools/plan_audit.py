@@ -7,15 +7,17 @@ Python (Arrow) stages, and red flags (CartesianProduct, row-at-a-time
 BatchEvalPython). ``tests/test_plan_invariants.py`` enforces the hard
 rules; this tool renders the full table for review.
 
-Usage: python tools/plan_audit.py   (writes /root/repo/PLANS.md)
+Usage: python tools/plan_audit.py   (writes PLANS.md at the repo root)
 """
 
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF = "/root/testdata/sf0.01"
 
@@ -78,7 +80,7 @@ def main() -> None:
             f"| {'y' if f['pushed'] else '—'} | {f['takeordered'] or '—'} |"
         )
     lines.append("")
-    with open("/root/repo/PLANS.md", "w") as fh:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as fh:
         fh.write("\n".join(lines))
     n_err = sum(1 for _n, _f, e in rows if e)
     print(f"wrote PLANS.md: {len(rows)} queries, {n_err} errors")

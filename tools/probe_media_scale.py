@@ -27,12 +27,14 @@ and ``SPARK_DRIVER_MEMORY`` size it like every other entry point.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-FX = "/root/repo/fixtures"
+FX = os.path.join(ROOT, "fixtures")
 
 
 def main() -> None:

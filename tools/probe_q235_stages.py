@@ -33,9 +33,11 @@ Usage: python tools/probe_q235_stages.py [sf_dir]   (default synth sf1)
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import duckdb  # noqa: E402
 

@@ -16,9 +16,11 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 N_WINDOW = 50
 N_ANCHORS = 25  # §2 anchors pinned at the head of _PRIORITY
@@ -27,7 +29,7 @@ N_ANCHORS = 25  # §2 anchors pinned at the head of _PRIORITY
 def driver_rows() -> dict[str, list]:
     """name -> [(round_file, green: bool, hash: bool)] across rounds."""
     out: dict[str, list] = {}
-    for f in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for f in sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))):
         for name, row in json.load(open(f)).items():
             if not isinstance(row, dict):
                 continue
