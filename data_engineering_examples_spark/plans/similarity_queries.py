@@ -37,6 +37,7 @@ import random
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.centroids import centroid_update, exact_sq, nearest, sq_dists
 from ..scratch import materialize, memo_substrate
 from ..sources.tables import load_tables, scale_out
 from .registry import register
@@ -624,11 +625,12 @@ def _ivf_ranked_substrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, cent_id, rk) — every vector's centroids ranked by cosine
     (the IVF coarse index: rk = 1 is the posting-list assignment, rk <=
     nprobe are a probe's lists).  One session-wide build through the
-    memo_substrate seam serves q50's serve path and q217's filtered
-    search; q211 deliberately keeps its own build — its subject IS the
-    build->publish->serve cycle.  The rk ranking is a deterministic
-    row_number over the per-vector cosine ordering (ties to the lower
-    cent_id), so the integer table round-trips parquet exactly."""
+    memo_substrate seam serves q50's serve path, q145's purity audit
+    and q217's filtered search; q211 deliberately keeps its own build —
+    its subject IS the build->publish->serve cycle.  The rk ranking is
+    a deterministic row_number over the per-vector cosine ordering
+    (ties to the lower cent_id), so the integer table round-trips
+    parquet exactly."""
 
     def build() -> DataFrame:
         emb = scale_out(
@@ -705,30 +707,28 @@ def q50_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # from the SQL gate; quantization removes the float-summation-order
 # nondeterminism that forces that exemption).
 #
-# Determinism design: embeddings are quantized once to integer
-# micro-units (floor(x * 1e6)); a squared distance to a mean-centroid
-# (cs/n) is compared as the n²-scaled integer  Σ_d (n·xq − cs_d)² — a
-# DECIMAL(19,0)² sum both engines evaluate exactly, so the argmin (and
-# therefore every assignment, and therefore the next centroid) is
-# bit-identical in Spark and DuckDB. Ties break toward the lower
-# cluster id in both.
+# Determinism: operators/centroids.py owns the rule every exact-integer
+# pipeline here shares — squared distances to an undivided mean-centroid
+# (cs, n) compared as Σ_d (n·xq − cs_d)² in DECIMAL(19,0), ties toward
+# the lower cluster id — so every assignment, and therefore every next
+# centroid, is bit-identical in Spark and DuckDB.
 #
 # Scale shape: centroid tables are K·DIM rows (512 here) — broadcast,
-# never shuffled; each iteration is one broadcast join over the
-# quantized per-dim fact (rows = N·DIM, partition-parallel) plus two
-# keyed aggregations. The quantized substrate is checkpointed once and
-# reused by all five passes (assign×2, update×2, final) instead of
-# re-exploding the scan per pass. Reference parallel: the reference has
-# no iterative ML surface; this extends the engine for LLM-pipeline
-# clustering (IVF list training for q50's index).
+# never shuffled; each round is sq_dists (one broadcast join over the
+# shared quantized fact, rows = N·DIM) -> nearest -> centroid_update
+# (the N-row assignment broadcasts back into the fact), chained lazily
+# with no materialization between rounds. Reference parallel: the
+# reference has no iterative ML surface; this extends the engine for
+# LLM-pipeline clustering (IVF list training for q50's index).
 
 KMEANS_SCALE = 1_000_000.0
 
 def _xq_substrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared quantized per-dim embedding fact: (vec_id, dim, xq) with
-    xq = floor(x * KMEANS_SCALE) — the exact-integer substrate FIVE
-    pipelines consume (q94 Lloyd, q101 PQ codes, q107 drift, q175
-    IVF-PQ, q235 learned SemDeDup; q230 reads its (dim, xq) slice).
+    xq = floor(x * KMEANS_SCALE) — the ``xq`` input of the
+    operators/centroids.py nearest-centroid operator for FIVE pipelines
+    (q94 Lloyd, q101 PQ codes, q107 drift, q175 IVF-PQ, q235 learned
+    SemDeDup; q230 reads its (dim, xq) slice).
     Built ONCE per (session, sf_dir) through the memo_substrate seam —
     the same corpus-snapshot policy as the shingle/LSH-pair tables —
     instead of one explode+quantize pass per consumer per invocation."""
@@ -746,6 +746,18 @@ def _xq_substrate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return memo_substrate(spark, "kmeans_xq", sf_dir, build)
+
+
+def _seed_cents(xq: DataFrame) -> DataFrame:
+    """(cluster, dim, cs, n): the CENT_IDS vectors as one-member
+    centroids — q94/q107/q175's seeds and q101/q175's PQ codebook."""
+    return xq.filter(F.col("vec_id").isin(CENT_IDS)).select(
+        F.col("vec_id").alias("cluster"),
+        "dim",
+        F.col("xq").alias("cs"),
+        F.lit(1).cast("bigint").alias("n"),
+    )
+
 
 KMEANS_ITERS = 2  # fixed, unrolled in the oracle
 
@@ -810,49 +822,14 @@ def q94_kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shared quantized per-dim substrate (one build per session serves
     # all five exact-integer embedding pipelines — see _xq_substrate)
     xq = _xq_substrate(spark, sf_dir)
-
-    def assign(cent: DataFrame) -> DataFrame:
-        """argmin_c Σ_d (n·xq − cs_d)² — exact DECIMAL(19,0) arithmetic;
-        min(struct(dist, cluster)) gives the dist-then-cluster tie-break
-        without a second shuffle (no window needed)."""
-        diff = (F.col("n") * F.col("xq") - F.col("cs")).cast("decimal(19,0)")
-        dists = (
-            xq.join(F.broadcast(cent), "dim")
-            .groupBy("vec_id", "cluster")
-            .agg(F.sum(diff * diff).alias("dist"))
-        )
-        return (
-            dists.groupBy("vec_id")
-            .agg(F.min(F.struct("dist", "cluster")).alias("m"))
-            .select("vec_id", F.col("m.cluster").alias("cluster"))
-        )
-
-    def update(assign_df: DataFrame) -> DataFrame:
-        return (
-            xq.join(assign_df, "vec_id")
-            .groupBy("cluster", "dim")
-            .agg(F.sum("xq").alias("cs"), F.count(F.lit(1)).alias("n"))
-        )
-
-    cent = xq.filter(F.col("vec_id").isin(CENT_IDS)).select(
-        F.col("vec_id").alias("cluster"),
+    cent = _seed_cents(xq)
+    for _ in range(KMEANS_ITERS):
+        cent = centroid_update(xq, nearest(sq_dists(xq, cent)))
+    return cent.select(
+        F.col("cluster").alias("cluster_id"),
         "dim",
-        F.col("xq").alias("cs"),
-        F.lit(1).cast("bigint").alias("n"),
-    )
-    for _ in range(KMEANS_ITERS - 1):
-        cent = update(assign(cent))
-    final_assign = assign(cent)
-    return (
-        xq.join(final_assign, "vec_id")
-        .groupBy(
-            F.col("cluster").alias("cluster_id"),
-            "dim",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_members"),
-            (F.sum("xq").cast("double") / F.count(F.lit(1))).alias("centroid"),
-        )
+        F.col("n").alias("n_members"),
+        (F.col("cs").cast("double") / F.col("n")).alias("centroid"),
     )
 
 
@@ -876,6 +853,17 @@ def q94_kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 N_SUBSPACES = 8
 SUB_DIM = DIM // N_SUBSPACES  # 8
+
+
+def _subspaces(xq: DataFrame) -> DataFrame:
+    """(vec_id, subspace, dim, xq): the quantized fact keyed by PQ
+    subspace (dim div SUB_DIM, truncating)."""
+    return xq.select(
+        "vec_id",
+        (F.col("dim") / SUB_DIM).cast("int").alias("subspace"),
+        "dim",
+        "xq",
+    )
 
 
 def _duck_pq_oracle() -> str:
@@ -921,35 +909,12 @@ def _duck_pq_oracle() -> str:
     tags=("similarity", "llm"),
 )
 def q101_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # shared substrate + a lazy subspace projection (dim div SUB_DIM is
-    # the same truncating division the dedicated build used)
-    sub = _xq_substrate(spark, sf_dir).select(
-        "vec_id",
-        (F.col("dim") / SUB_DIM).cast("int").alias("subspace"),
-        "dim",
-        "xq",
-    )
-    cb = sub.filter(F.col("vec_id").isin(CENT_IDS)).select(
-        F.col("subspace").alias("c_subspace"),
-        F.col("vec_id").alias("code"),
-        F.col("dim").alias("c_dim"),
-        F.col("xq").alias("cq"),
-    )
-    diff = (F.col("xq") - F.col("cq")).cast("decimal(19,0)")
-    dists = (
-        sub.join(
-            F.broadcast(cb),
-            (F.col("subspace") == F.col("c_subspace")) & (F.col("dim") == F.col("c_dim")),
-        )
-        .groupBy("vec_id", "subspace", "code")
-        .agg(F.sum(diff * diff).alias("dist"))
-    )
-    best = (
-        dists.groupBy("vec_id", "subspace")
-        .agg(F.min(F.struct("dist", "code")).alias("m"))
-        .select("vec_id", "subspace", F.col("m.code").alias("code"), F.col("m.dist").alias("dist"))
-    )
-    return best.groupBy("subspace", "code").agg(
+    # PQ codebook = the seed vectors; its rows need no subspace key
+    # because dim determines the subspace on both sides of the join
+    key = ("vec_id", "subspace")
+    xq = _xq_substrate(spark, sf_dir)
+    best = nearest(sq_dists(_subspaces(xq), _seed_cents(xq), by=key), by=key)
+    return best.groupBy("subspace", F.col("cluster").alias("code")).agg(
         F.count(F.lit(1)).alias("n_vectors"),
         (F.sum("dist").cast("double") / F.lit(KMEANS_SCALE) / F.lit(KMEANS_SCALE)).alias(
             "total_sq_error"
@@ -1129,18 +1094,7 @@ def q107_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shared quantized substrate (feeds seeds, assignment, both batch
     # aggs — one session-wide build, see _xq_substrate)
     xq = _xq_substrate(spark, sf_dir)
-    seeds = xq.filter(F.col("vec_id").isin(CENT_IDS)).select(
-        F.col("vec_id").alias("cluster"), "dim", F.col("xq").alias("cs")
-    )
-    diff = (F.col("xq") - F.col("cs")).cast("decimal(19,0)")
-    assign = (
-        xq.join(F.broadcast(seeds), "dim")
-        .groupBy("vec_id", "cluster")
-        .agg(F.sum(diff * diff).alias("dist"))
-        .groupBy("vec_id")
-        .agg(F.min(F.struct("dist", "cluster")).alias("m"))
-        .select("vec_id", F.col("m.cluster").alias("cluster"))
-    )
+    assign = nearest(sq_dists(xq, _seed_cents(xq)))
     cent = (
         xq.join(assign, "vec_id")
         .groupBy("cluster", (F.col("vec_id") % 2).alias("batch"), "dim")
@@ -1152,10 +1106,7 @@ def q107_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = cent.filter(F.col("batch") == 1).select(
         "cluster", "dim", F.col("cs").alias("cs_b"), F.col("n").alias("n_b")
     )
-    num = (F.col("n_b") * F.col("cs_a") - F.col("n_a") * F.col("cs_b")).cast(
-        "decimal(19,0)"
-    )
-    scale = F.col("n_a") * F.col("n_b") * F.lit(KMEANS_SCALE)
+    num_sq = exact_sq(F.col("n_b") * F.col("cs_a") - F.col("n_a") * F.col("cs_b"))
     return (
         p.join(q, ["cluster", "dim"])
         .groupBy(F.col("cluster").alias("cluster_id"))
@@ -1163,7 +1114,7 @@ def q107_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("n_a").alias("n_a"),
             F.max("n_b").alias("n_b"),
             (
-                F.sum(num * num).cast("double")
+                F.sum(num_sq).cast("double")
                 / (F.max("n_a") * F.max("n_b") * F.lit(KMEANS_SCALE))
                 / (F.max("n_a") * F.max("n_b") * F.lit(KMEANS_SCALE))
             ).alias("drift_sq"),
@@ -1245,15 +1196,16 @@ def q139_int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # q145 — cluster-purity audit against ground-truth labels: the standard
 # clustering-evaluation join (how well do IVF lists line up with the
-# `label` column). Assignment is exactly q50's broadcast-centroid
-# argmax-cosine (sequential-fold dot products, deterministic tie-break
-# to the lower centroid id); purity is pure counting — contingency
-# (centroid × label) then majority label per centroid — so the only
-# float in the output is one int/int division. At scale: one broadcast
-# pass for assignment, one shuffle on (cent_id, label) whose domain is
-# K × |labels| (bounded), then a K-row window. Purity ≈ 1 means the
-# index partitions like the labels; a centroid with low purity is where
-# ANN recall against label-matched neighbors degrades first.
+# `label` column). Assignment is q50's posting-list assignment, read
+# from the session-wide IVF index (_ivf_ranked_substrate, rk = 1:
+# argmax-cosine, ties to the lower centroid id); purity is pure
+# counting — contingency (centroid × label) then majority label per
+# centroid — so the only float in the output is one int/int division.
+# At scale: no assignment pass of its own, one shuffle on (cent_id,
+# label) whose domain is K × |labels| (bounded), then a K-row window.
+# Purity ≈ 1 means the index partitions like the labels; a centroid
+# with low purity is where ANN recall against label-matched neighbors
+# degrades first.
 
 @register(
     "q145_cluster_purity",
@@ -1298,20 +1250,9 @@ def q139_int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q145_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = scale_out(load_tables(spark, sf_dir, ["embeddings"])["embeddings"])
-    v = emb.select("vec_id", _to_double("embedding").alias("e"))
-    cents = F.broadcast(
-        v.filter(F.col("vec_id").isin(CENT_IDS)).select(
-            F.col("vec_id").alias("cent_id"), F.col("e").alias("ce")
-        )
-    )
-    cos_to_cent = _dot(F.col("e"), F.col("ce")) / (
-        F.sqrt(_dot(F.col("e"), F.col("e"))) * F.sqrt(_dot(F.col("ce"), F.col("ce")))
-    )
-    w_assign = Window.partitionBy("vec_id").orderBy(F.desc("cc"), F.asc("cent_id"))
+    # q50's posting-list assignment, served from the session-wide index
     assign = (
-        v.crossJoin(cents)
-        .select("vec_id", "cent_id", cos_to_cent.alias("cc"))
-        .withColumn("rk", F.row_number().over(w_assign))
+        _ivf_ranked_substrate(spark, sf_dir)
         .filter(F.col("rk") == 1)
         .select("vec_id", "cent_id")
     )
@@ -1440,64 +1381,29 @@ def _duck_ivfpq_oracle() -> str:
 def q175_ivfpq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shared quantized substrate (feeds coarse assign, codes, the LUT)
     xq = _xq_substrate(spark, sf_dir)
-    coarse = xq.filter(F.col("vec_id").isin(CENT_IDS)).select(
-        F.col("vec_id").alias("cent_id"), "dim", F.col("xq").alias("cs")
-    )
-    cdiff = (F.col("xq") - F.col("cs")).cast("decimal(19,0)")
-    cdist = (
-        xq.join(F.broadcast(coarse), "dim")
-        .groupBy("vec_id", "cent_id")
-        .agg(F.sum(cdiff * cdiff).alias("dist"))
-    )
-    assign = (
-        cdist.groupBy("vec_id")
-        .agg(F.min(F.struct("dist", "cent_id")).alias("m"))
-        .select("vec_id", F.col("m.cent_id").alias("cent_id"))
-    )
-    w_probe = Window.partitionBy("vec_id").orderBy("dist", "cent_id")
+    # the seed vectors are both the coarse centroids and the PQ codebook
+    seeds = _seed_cents(xq)
+    cdist = sq_dists(xq, seeds)
+    assign = nearest(cdist).select("vec_id", F.col("cluster").alias("cent_id"))
+    w_probe = Window.partitionBy("vec_id").orderBy("dist", "cluster")
     plists = (
         cdist.filter(F.col("vec_id") < N_PROBES)
         .withColumn("rn", F.row_number().over(w_probe))
         .filter(F.col("rn") <= N_PROBE_LISTS)
-        .select(F.col("vec_id").alias("probe_id"), "cent_id")
+        .select(F.col("vec_id").alias("probe_id"), F.col("cluster").alias("cent_id"))
     )
-    sub = xq.select(
-        "vec_id",
-        (F.col("dim") / SUB_DIM).cast("int").alias("subspace"),
-        "dim",
-        "xq",
+    key = ("vec_id", "subspace")
+    sub = _subspaces(xq)
+    codes = nearest(sq_dists(sub, seeds, by=key), by=key).select(
+        F.col("vec_id").alias("neighbor_id"),
+        "subspace",
+        F.col("cluster").alias("code"),
     )
-    cb = sub.filter(F.col("vec_id").isin(CENT_IDS)).select(
-        F.col("subspace").alias("c_subspace"),
-        F.col("vec_id").alias("code"),
-        F.col("dim").alias("c_dim"),
-        F.col("xq").alias("cq"),
-    )
-    sdiff = (F.col("xq") - F.col("cq")).cast("decimal(19,0)")
-    on_cb = (F.col("subspace") == F.col("c_subspace")) & (
-        F.col("dim") == F.col("c_dim")
-    )
-    code_d = (
-        sub.join(F.broadcast(cb), on_cb)
-        .groupBy("vec_id", "subspace", "code")
-        .agg(F.sum(sdiff * sdiff).alias("dist"))
-    )
-    codes = (
-        code_d.groupBy("vec_id", "subspace")
-        .agg(F.min(F.struct("dist", "code")).alias("m"))
-        .select(
-            F.col("vec_id").alias("neighbor_id"),
-            "subspace",
-            F.col("m.code").alias("code"),
-        )
-    )
-    lut = (
-        sub.filter(F.col("vec_id") < N_PROBES)
-        .join(F.broadcast(cb), on_cb)
-        .groupBy(
-            F.col("vec_id").alias("probe_id"), F.col("subspace"), F.col("code")
-        )
-        .agg(F.sum(sdiff * sdiff).alias("lut_dist"))
+    lut = sq_dists(sub.filter(F.col("vec_id") < N_PROBES), seeds, by=key).select(
+        F.col("vec_id").alias("probe_id"),
+        "subspace",
+        F.col("cluster").alias("code"),
+        F.col("dist").alias("lut_dist"),
     )
     # (probe, neighbor) is already unique: each neighbor sits in exactly
     # one coarse list — no DISTINCT needed (and none in the oracle).
@@ -1594,9 +1500,7 @@ def q198_label_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cs").alias("cs_b"),
         F.col("n").alias("n_b"),
     )
-    diff = (F.col("n_b") * F.col("cs_a") - F.col("n_a") * F.col("cs_b")).cast(
-        "decimal(19,0)"
-    )
+    num_sq = exact_sq(F.col("n_b") * F.col("cs_a") - F.col("n_a") * F.col("cs_b"))
     pairs = (
         a.join(
             F.broadcast(b),
@@ -1604,7 +1508,7 @@ def q198_label_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("label_a") < F.col("label_b")),
         )
         .groupBy("label_a", "label_b", "n_a", "n_b")
-        .agg(F.sum(diff * diff).alias("num"))
+        .agg(F.sum(num_sq).alias("num"))
     )
     norm = F.col("n_a").cast("double") * F.col("n_b") * F.lit(KMEANS_SCALE)
     return pairs.select(
@@ -2418,11 +2322,10 @@ def q231_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cluster assignment, and q231's within-cluster closure (pair cosine ≥
 # threshold → CC → keep rule) runs over the LEARNED clusters.
 #
-# Determinism: the Lloyd argmin uses q94's convention — squared distance
-# to a mean centroid cs/n compared as the n²-scaled integer
-# Σ_d (n·xq − cs_d)², an exact DECIMAL sum both engines evaluate
-# bit-identically (ties toward the lower cluster id).  The keep rule
-# orders on that same scaled distance DESC (farthest-from-centroid =
+# Determinism: the Lloyd rounds run operators/centroids.py's exact rule
+# (squared distance to a mean centroid cs/n compared as the n²-scaled
+# integer Σ_d (n·xq − cs_d)², ties toward the lower cluster id).  The
+# keep rule orders on that same scaled distance DESC (farthest-from-centroid =
 # the paper's low-centroid-similarity keep), which is scale-safe
 # because edges never cross clusters, so every member of a component
 # shares one cluster and therefore one n² factor — within a component
@@ -2526,6 +2429,28 @@ def _semdedup_edges(m: DataFrame, threshold: float) -> DataFrame:
     ).applyInPandas(pairs, "u long, v long, cos_sim double")
 
 
+def _learned_assign(xq: DataFrame, seeds: DataFrame) -> DataFrame:
+    """(vec_id, cluster, dist): q235's Q235_ITERS exact-integer Lloyd
+    rounds over the xq substrate, seeded by the ``seeds`` vec_ids (they
+    broadcast into the substrate, so seeding never shuffles the N·DIM
+    rows).  tools/probe_q235_stages.py checks this against DuckDB."""
+    cent = xq.join(F.broadcast(seeds), "vec_id").select(
+        F.col("vec_id").alias("cluster"),
+        "dim",
+        F.col("xq").alias("cs"),
+        F.lit(1).cast("bigint").alias("n"),
+    )
+    for it in range(Q235_ITERS - 1):
+        # materialize the updated centroid table (K·DIM rows — tiny)
+        # between Lloyd rounds: without this the next round's broadcast
+        # re-executes the ENTIRE prior chain (xq join + assignment +
+        # re-aggregation) inside its own plan, tripling the runtime
+        cent = materialize(
+            centroid_update(xq, nearest(sq_dists(xq, cent))), f"q235_cent_{it}"
+        )
+    return nearest(sq_dists(xq, cent))
+
+
 def _duck_semdedup_learned_oracle() -> str:
     sqdiff = (
         "CAST(c.n * x.xq - c.cs AS DECIMAL(19,0))"
@@ -2608,54 +2533,15 @@ def q235_semantic_dedup_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shared quantized substrate (one session-wide build feeds all Lloyd
     # passes here and the four sibling pipelines — see _xq_substrate)
     xq = _xq_substrate(spark, sf_dir)
-
-    def assign(cent: DataFrame) -> DataFrame:
-        diff = (F.col("n") * F.col("xq") - F.col("cs")).cast("decimal(19,0)")
-        dists = (
-            xq.join(F.broadcast(cent), "dim")
-            .groupBy("vec_id", "cluster")
-            .agg(F.sum(diff * diff).alias("dist"))
-        )
-        return (
-            dists.groupBy("vec_id")
-            .agg(F.min(F.struct("dist", "cluster")).alias("m"))
-            .select("vec_id", F.col("m.cluster").alias("cluster"),
-                    F.col("m.dist").alias("dist"))
-        )
-
     # K ~ sqrt(N) seed rule (see _semdedup_seed_frame): the count is a
-    # one-row bound fetch on the source scan; the seed top-K broadcasts
-    # into the xq substrate so seeding never shuffles the N·DIM rows
-    seeds = _semdedup_seed_frame(emb, emb.count())
-    cent = xq.join(F.broadcast(seeds), "vec_id").select(
-        F.col("vec_id").alias("cluster"),
-        "dim",
-        F.col("xq").alias("cs"),
-        F.lit(1).cast("bigint").alias("n"),
-    )
-    for it in range(Q235_ITERS - 1):
-        # materialize the updated centroid table (K·DIM rows — tiny)
-        # between Lloyd rounds: without this the next round's broadcast
-        # re-executes the ENTIRE prior chain (xq join + assignment +
-        # re-aggregation) inside its own plan, tripling the runtime
-        # the assignment is N rows (one per vector) — broadcast it so
-        # the N·DIM substrate never shuffles for the centroid update
-        cent = materialize(
-            xq.join(
-                F.broadcast(assign(cent).select("vec_id", "cluster")), "vec_id"
-            )
-            .groupBy("cluster", "dim")
-            .agg(F.sum("xq").alias("cs"), F.count(F.lit(1)).alias("n")),
-            f"q235_cent_{it}",
-        )
+    # one-row bound fetch on the source scan
+    learned = _learned_assign(xq, _semdedup_seed_frame(emb, emb.count()))
     vn = emb.select("vec_id", _to_double("embedding").alias("e")).withColumn(
         "nrm", F.sqrt(_dot(F.col("e"), F.col("e")))
     )
     # final assignment feeds both pair-join sides, CC membership and the
     # keep ordering — one substrate, materialized once (q231 pattern)
-    m = materialize(
-        assign(cent).join(vn, "vec_id"), "q235_assign"
-    )
+    m = materialize(learned.join(vn, "vec_id"), "q235_assign")
     # one Lloyd round collapses most vectors into a dominant cluster
     # (measured 1607/2000 at sf0.1 → 1.3M candidate pairs, 10× q231's),
     # so the pair stage is the shared Arrow kernel: BLAS screen +

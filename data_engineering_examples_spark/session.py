@@ -28,8 +28,15 @@ def get_spark(
     ones, so at 100 TB the same config holds with a larger initial value
     (rule of thumb: ~2-3x total executor cores, target 64-256 MB per
     shuffle partition).
+
+    Cores: ``cpus``, else ``SPARK_GRAFT_CPUS``, else the cores this
+    process may run on.
     """
-    cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = str(
+        cpus
+        or os.environ.get("SPARK_GRAFT_CPUS")
+        or len(os.sched_getaffinity(0))
+    )
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

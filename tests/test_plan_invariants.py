@@ -163,6 +163,24 @@ def test_no_raw_local_checkpoint_outside_materialize_seam():
     assert offenders == [], offenders
 
 
+def test_exact_distance_rule_lives_in_one_operator():
+    """The DECIMAL(19,0) distance fold and the (dist, cluster) argmin are
+    the bit-parity rule of every exact-integer clustering pipeline; a
+    second copy can drift from the oracles unnoticed, so both live only
+    in ``operators/centroids.py``.  Oracle SQL spells the cast in upper
+    case and is not matched."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "data_engineering_examples_spark"
+    for needle in ('"decimal(19,0)"', 'F.min(F.struct("dist"'):
+        sites = sorted(
+            str(py.relative_to(pkg))
+            for py in pkg.rglob("*.py")
+            if any(needle in line.split("#", 1)[0] for line in py.read_text().splitlines())
+        )
+        assert sites == ["operators/centroids.py"], (needle, sites)
+
+
 def test_no_driver_side_collect_in_package():
     """The only acceptable driver materialization is in tools/tests. A
     ``.collect()`` inside the package means an operator is looping rows

@@ -12,8 +12,9 @@ can release the previous stage's temp before the next starts.  This
 probe therefore verifies, stage by stage:
 
   1. seed set      — K and the md5-ranked seed ids match exactly;
-  2. assignment    — (vec_id, cluster, dist) after the unrolled Lloyd
-                     rounds match exactly (the exact-integer argmin);
+  2. assignment    — (vec_id, cluster, dist) after q235's Lloyd rounds
+                     (``_learned_assign``, the engine's code) match the
+                     unrolled DuckDB rounds exactly;
   3. edge set      — the within-cluster cosine pairs from the Arrow
                      kernel match DuckDB's fold-based pair join exactly.
 
@@ -79,34 +80,6 @@ def staged_check(spark, sf_dir: str, verbose: bool = False) -> list:
         f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{sf_dir}/embeddings.parquet')"
     )
 
-    xq = materialize(
-        emb.select("vec_id", F.posexplode("embedding").alias("dim", "x")).select(
-            "vec_id",
-            F.col("dim").cast("int").alias("dim"),
-            F.floor(F.col("x").cast("double") * F.lit(sq.KMEANS_SCALE))
-            .cast("bigint")
-            .alias("xq"),
-        ),
-        "probe235_xq",
-    )
-
-    def assign(cent):
-        diff = (F.col("n") * F.col("xq") - F.col("cs")).cast("decimal(19,0)")
-        dists = (
-            xq.join(F.broadcast(cent), "dim")
-            .groupBy("vec_id", "cluster")
-            .agg(F.sum(diff * diff).alias("dist"))
-        )
-        return (
-            dists.groupBy("vec_id")
-            .agg(F.min(F.struct("dist", "cluster")).alias("m"))
-            .select(
-                "vec_id",
-                F.col("m.cluster").alias("cluster"),
-                F.col("m.dist").alias("dist"),
-            )
-        )
-
     # --- stage 1: seeds -----------------------------------------------
     seeds = sq._semdedup_seed_frame(emb, n)
     s_spark = sorted(r.vec_id for r in seeds.collect())
@@ -132,20 +105,8 @@ def staged_check(spark, sf_dir: str, verbose: bool = False) -> list:
         print(f"stage 1 seeds: OK (K={len(s_spark)}, N={n})")
 
     # --- stage 2: assignment ------------------------------------------
-    cent = xq.join(F.broadcast(seeds), "vec_id").select(
-        F.col("vec_id").alias("cluster"),
-        "dim",
-        F.col("xq").alias("cs"),
-        F.lit(1).cast("bigint").alias("n"),
-    )
-    for it in range(sq.Q235_ITERS - 1):
-        cent = materialize(
-            xq.join(F.broadcast(assign(cent).select("vec_id", "cluster")), "vec_id")
-            .groupBy("cluster", "dim")
-            .agg(F.sum("xq").alias("cs"), F.count(F.lit(1)).alias("n")),
-            f"probe235_cent_{it}",
-        )
-    final = assign(cent)
+    # the engine's own Lloyd rounds over its own quantized substrate
+    final = sq._learned_assign(sq._xq_substrate(spark, sf_dir), seeds)
     a_spark = {r.vec_id: (r.cluster, str(r.dist)) for r in final.collect()}
 
     sqdiff = (
