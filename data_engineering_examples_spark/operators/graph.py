@@ -13,9 +13,10 @@ round's labels sit on storage that survives executor loss (an O(log d)
 iterative job that loses all progress on one lost executor is not a
 cluster algorithm).
 
-Used by q72 (dedup clusters over exact+LSH edges) and q131 (patient
-record-linkage clusters); the loop runs to its probed fixpoint, and both
-queries' recursive-CTE oracles check the resulting components.
+Used by q72 (dedup clusters over exact+LSH edges), q131 (patient
+record-linkage clusters), q226 (perceptual image clusters) and q231
+(coarse SemDeDup groups); the loop runs to its probed fixpoint, and the
+callers' recursive-CTE oracles check the resulting components.
 """
 
 from __future__ import annotations
@@ -71,7 +72,7 @@ def connected_components(
     scratch module's wipe-per-call space-reuse contract)."""
     # explode, not self-union: a union evaluates the caller's edge plan
     # TWICE inside the one materialization job (and the edge list often
-    # comes out of an expensive candidate pipeline — q235's Arrow pair
+    # comes out of an expensive candidate pipeline — q231's Arrow pair
     # kernel, q131's blocked self-join); the two-struct explode emits
     # both directions from a SINGLE evaluation (guide §2.4).
     bidir = materialize(

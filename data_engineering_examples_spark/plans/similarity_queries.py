@@ -23,10 +23,10 @@ Everything is built-in higher-order Column expressions — no UDFs; the
 vector math runs inside codegen on the JVM.  One measured exception:
 the SemDeDup within-cluster pair stage (quadratic in the dominant
 cluster size; q231/q246/q260 over the coarse clusters, q235 over the
-learned ones) uses an Arrow-batched ``applyInPandas`` kernel — a BLAS
-matmul candidate screen with a rigorous error margin, then the EXACT
-left-to-right fold re-evaluated on the boundary band — because the
-interpreted higher-order fold costs ~140µs per pair (see
+learned ones) uses Arrow-batched ``applyInPandas`` kernels over one
+screen — a BLAS matmul candidate screen with a rigorous error margin,
+then the EXACT left-to-right fold re-evaluated on the boundary band —
+because the interpreted higher-order fold costs ~140µs per pair (see
 ``_semdedup_edges``).
 """
 
@@ -2116,8 +2116,8 @@ def q230_embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # * Centroid assignment is a broadcast cross join (K·N cosines,
 #   map-side) — the big table never shuffles for the assign.
 # * The pairwise stage shuffles once on cent_id and runs each cluster
-#   through the grouped Arrow kernel (_semdedup_edges, shared with
-#   q235); K IS sized ceil(sqrt(N)) (r12 — the r11 sf10 probe measured
+#   through the grouped Arrow kernel (_semdedup_edges, whose screen
+#   q235 shares); K IS sized ceil(sqrt(N)) (r12 — the r11 sf10 probe measured
 #   the old fixed-16 variant at 55-97× per decade, the (N/K)² pair
 #   wall; with K ~ √N per-cluster pair work grows linearly). Norms are
 #   computed ONCE per vector and ship with it.
@@ -2320,7 +2320,7 @@ def q231_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Lloyd refinement (seeded by the K = ceil(sqrt(N)) md5-ranked sample
 # vectors of _semdedup_seed_frame, run for Q235_ITERS rounds) feeds the
 # cluster assignment, and q231's within-cluster closure (pair cosine ≥
-# threshold → CC → keep rule) runs over the LEARNED clusters.
+# threshold → components → keep rule) runs over the LEARNED clusters.
 #
 # Determinism: the Lloyd rounds run operators/centroids.py's exact rule
 # (squared distance to a mean centroid cs/n compared as the n²-scaled
@@ -2333,14 +2333,14 @@ def q231_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # double dot (module docstring).  No floats are emitted: the output is
 # ids + booleans.
 #
-# Scale shape: everything q94 and q231 already argue, composed — the
-# xq substrate is materialized once and feeds all Lloyd passes; centroid
-# tables stay K·DIM rows (broadcast); the pair stage shuffles once on
-# the learned cluster id; CC touches edge endpoints only.  K is WIRED to
-# ~sqrt(N) (r10; _semdedup_seed_frame) so the dominant cluster's
-# quadratic screen stays bounded as the corpus grows — the dial the r9
-# synthetic-sf1 sweep measured (bench_snapshots/README.md) is now the
-# code path, not a note.
+# Scale shape: the xq substrate is materialized once and feeds all
+# Lloyd passes; centroid tables stay K·DIM rows (broadcast); as no edge
+# crosses a cluster, one shuffle on the learned cluster id feeds one
+# kernel for pairs, closure and keep rule (_semdedup_closure: no CC
+# rounds).  K is WIRED to ~sqrt(N) (r10; _semdedup_seed_frame) so the
+# dominant cluster's quadratic screen stays bounded as the corpus grows
+# — the dial the r9 synthetic-sf1 sweep measured
+# (bench_snapshots/README.md) is now the code path, not a note.
 
 Q235_ITERS = 2  # Lloyd rounds, unrolled in the oracle
 
@@ -2356,10 +2356,50 @@ Q235_ITERS = 2  # Lloyd rounds, unrolled in the oracle
 _SEMDEDUP_SCREEN_SLACK = 1e-9
 
 
+def _semdedup_screen(emb, nrm, threshold: float):
+    """``(i, j, cos)``: the row pairs ``i < j`` of ONE cluster (``emb``
+    its n×DIM block, ``nrm`` its norms) whose exact left-fold cosine is
+    ``>= threshold`` — the one pair screen of both SemDeDup kernels
+    (``_semdedup_edges``, ``_semdedup_closure``)."""
+    import numpy as np
+
+    n = len(nrm)
+    # Zero-norm embeddings make every pair cosine 0/0.  numpy would
+    # quietly produce NaN and drop the pairs; fail loudly instead,
+    # as the engine's ANSI divideByZeroError does for the same
+    # cosine in Spark SQL.  A singleton cluster has no pairs.
+    if n > 1 and (nrm == 0.0).any():
+        raise ValueError(
+            "zero-norm embedding in SemDeDup pair stage (cosine is "
+            "0/0) — clean the corpus first"
+        )
+    lo = threshold - _SEMDEDUP_SCREEN_SLACK
+    # row-block the screen: the full n×n cosine matrix (plus
+    # triu index arrays) is O(n²·8B) — ~2 GB per 16k-row cluster,
+    # which the sf1 sweep measured as allocator thrash.  A 512-row
+    # block keeps peak memory at block×n doubles (~64 MB) with the
+    # same dgemm throughput.
+    blk = 512
+    out = [(np.empty(0, np.intp),) * 2 + (nrm[:0],)]
+    for s in range(0, n - 1, blk):
+        e = min(s + blk, n)
+        cos_fast = (emb[s:e] @ emb.T) / np.outer(nrm[s:e], nrm)
+        bi, bj = np.nonzero(cos_fast >= lo)
+        gi = bi + s
+        upper = bj > gi  # strict upper triangle, global indices
+        ci, cj = gi[upper], bj[upper]
+        # exact left-to-right fold on the candidates only
+        dots = np.cumsum(emb[ci] * emb[cj], axis=1)[:, -1]
+        cos = dots / (nrm[ci] * nrm[cj])
+        keep = cos >= threshold
+        out.append((ci[keep], cj[keep], cos[keep]))
+    return tuple(np.concatenate(col) for col in zip(*out))
+
+
 def _semdedup_edges(m: DataFrame, threshold: float) -> DataFrame:
     """Within-cluster cosine edges (u < v, cos_sim >= ``threshold``) via
-    a grouped Arrow kernel — the one SemDeDup pair stage (q235 over its
-    learned clusters, ``_coarse_semdedup_pairs`` over the coarse ones).
+    a grouped Arrow kernel over ``_semdedup_screen`` — the coarse
+    family's pair list (``_coarse_semdedup_pairs``).
 
     ``m`` holds one row per vector: (vec_id, cluster, e: array<double>,
     nrm: double).  The JVM formulation — self-join on cluster + the
@@ -2377,56 +2417,66 @@ def _semdedup_edges(m: DataFrame, threshold: float) -> DataFrame:
 
     Scale note: one group = one task, so the dominant cluster's O(n²)
     screen runs single-task — but as a row-blocked dgemm, ~50ms per
-    1.6k×1.6k cluster.  Both callers seed K ~ sqrt(N) clusters
+    1.6k×1.6k cluster.  Both kernels' callers seed K ~ sqrt(N) clusters
     (``_semdedup_seed_frame``); q235's Lloyd rounds can still grow one
     cluster to most of the corpus.
     """
     import numpy as np
     import pandas as pd
 
-    lo = threshold - _SEMDEDUP_SCREEN_SLACK
-
     def pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
         ids = pdf["vec_id"].to_numpy()
-        emb = np.vstack(pdf["e"].to_numpy())
-        nrm = pdf["nrm"].to_numpy(dtype="float64")
-        # Zero-norm embeddings make every pair cosine 0/0.  numpy would
-        # quietly produce NaN and drop the pairs; fail loudly instead,
-        # as the engine's ANSI divideByZeroError does for the same
-        # cosine in Spark SQL.  A singleton cluster has no pairs.
-        if n > 1 and (nrm == 0.0).any():
-            raise ValueError(
-                "zero-norm embedding in SemDeDup pair stage (cosine is "
-                "0/0) — clean the corpus first"
-            )
-        # row-block the screen: the full n×n cosine matrix (plus
-        # triu index arrays) is O(n²·8B) — ~2 GB per 16k-row cluster,
-        # which the sf1 sweep measured as allocator thrash.  A 512-row
-        # block keeps peak memory at block×n doubles (~64 MB) with the
-        # same dgemm throughput.
-        blk = 512
-        out = [(ids[:0], ids[:0], nrm[:0])]
-        for s in range(0, n - 1, blk):
-            e = min(s + blk, n)
-            cos_fast = (emb[s:e] @ emb.T) / np.outer(nrm[s:e], nrm)
-            bi, bj = np.nonzero(cos_fast >= lo)
-            gi = bi + s
-            upper = bj > gi  # strict upper triangle, global indices
-            ci, cj = gi[upper], bj[upper]
-            # exact left-to-right fold on the candidates only
-            dots = np.cumsum(emb[ci] * emb[cj], axis=1)[:, -1]
-            cos = dots / (nrm[ci] * nrm[cj])
-            keep = cos >= threshold
-            out.append((ids[ci[keep]], ids[cj[keep]], cos[keep]))
-        uu, vv, cc = (np.concatenate(col) for col in zip(*out))
+        i, j, cos = _semdedup_screen(
+            np.vstack(pdf["e"]), pdf["nrm"].to_numpy("float64"), threshold
+        )
+        u, v = ids[i], ids[j]
         return pd.DataFrame({
-            "u": np.minimum(uu, vv), "v": np.maximum(uu, vv), "cos_sim": cc,
+            "u": np.minimum(u, v), "v": np.maximum(u, v), "cos_sim": cos,
         })
 
     return m.select("vec_id", "cluster", "e", "nrm").groupBy(
         "cluster"
     ).applyInPandas(pairs, "u long, v long, cos_sim double")
+
+
+def _semdedup_closure(m: DataFrame, threshold: float) -> DataFrame:
+    """``(vec_id, cluster_id, component, keep)`` per edge endpoint: q235's
+    pairs, closure and keep rule in one grouped kernel over ``m`` =
+    (vec_id, cluster, dist, e, nrm).  No edge crosses a cluster, so each
+    group labels its own components: min-label propagation with pointer
+    jumping, to its fixpoint, over vec_id-sorted rows, so a component's
+    label is its least vec_id.  ``keep`` marks the largest ``dist``, ties
+    to the lower vec_id; ``dist`` exceeds 2⁵³, so it stays a Decimal."""
+    import numpy as np
+    import pandas as pd
+
+    def closure(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("vec_id")
+        ids, dist = pdf["vec_id"].to_numpy(), pdf["dist"].to_numpy()
+        i, j, _ = _semdedup_screen(
+            np.vstack(pdf["e"]), pdf["nrm"].to_numpy("float64"), threshold
+        )
+        label, prev = np.arange(len(ids)), None
+        while not np.array_equal(label, prev):  # labels only ever decrease
+            prev, label = label, label.copy()
+            np.minimum.at(label, i, prev[j])
+            np.minimum.at(label, j, prev[i])
+            label = label[label]  # pointer jump
+        rows = np.unique(np.concatenate([i, j]))  # ascending vec_id
+        best: dict = {}
+        for r in rows.tolist():  # strict ">": a tie stays with the lower id
+            if label[r] not in best or dist[r] > dist[best[label[r]]]:
+                best[label[r]] = r
+        return pd.DataFrame({
+            "vec_id": ids[rows],
+            "cluster_id": pdf["cluster"].to_numpy()[rows],
+            "component": ids[label[rows]],
+            "keep": [best[label[r]] == r for r in rows.tolist()],
+        })
+
+    return m.select("vec_id", "cluster", "dist", "e", "nrm").groupBy(
+        "cluster"
+    ).applyInPandas(closure, "vec_id long, cluster_id long, component long, keep boolean")
 
 
 def _learned_assign(xq: DataFrame, seeds: DataFrame) -> DataFrame:
@@ -2539,43 +2589,7 @@ def q235_semantic_dedup_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
     vn = emb.select("vec_id", _to_double("embedding").alias("e")).withColumn(
         "nrm", F.sqrt(_dot(F.col("e"), F.col("e")))
     )
-    # final assignment feeds both pair-join sides, CC membership and the
-    # keep ordering — one substrate, materialized once (q231 pattern)
-    m = materialize(learned.join(vn, "vec_id"), "q235_assign")
-    # one Lloyd round collapses most vectors into a dominant cluster
-    # (measured 1607/2000 at sf0.1 → 1.3M candidate pairs, 10× q231's),
-    # so the pair stage is the shared Arrow kernel: BLAS screen +
-    # exact-fold recheck, identical edge set to the exact fold by the
-    # margin argument at _SEMDEDUP_SCREEN_SLACK; CC needs only (u, v).
-    # Materialized: the kernel otherwise re-runs inside BOTH branches
-    # of CC's bidirected union AND the node derivation (~4 evaluations
-    # of a 1.9 s pass — r14 measured CC over lazy edges at 6.1 s vs
-    # 3.6 s over the checkpointed edge list; guide §2.4
-    # duplicated-subtree cut).
-    edges = materialize(
-        _semdedup_edges(m, SEMDEDUP_COS).select("u", "v"), "q235_edges"
-    )
-    nodes = (
-        edges.select(F.col("u").alias("id"))
-        .union(edges.select(F.col("v").alias("id")))
-        .distinct()
-    )
-    from ..operators.graph import connected_components
-
-    cc = connected_components(nodes, edges, scratch_prefix="q235_cc")
-    w_keep = Window.partitionBy("component").orderBy(
-        F.desc("dist"), F.asc("vec_id")
-    )
-    return (
-        cc.select(F.col("id").alias("vec_id"), F.col("cluster_id").alias("component"))
-        .join(m.select("vec_id", "cluster", "dist"), "vec_id")
-        .select(
-            "vec_id",
-            F.col("cluster").alias("cluster_id"),
-            "component",
-            (F.row_number().over(w_keep) == 1).alias("keep"),
-        )
-    )
+    return _semdedup_closure(learned.join(vn, "vec_id"), SEMDEDUP_COS)
 
 
 # ---------------------------------------------------------------------------

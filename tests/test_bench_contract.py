@@ -25,11 +25,15 @@ def test_bench_prints_one_json_line_with_contract_keys(tmp_path):
     # NEVER write into the repo's bench_snapshots/ from a test: that
     # would overwrite the round's real full-record artifact.
     env["SPARK_GRAFT_BENCH_FULL_PATH"] = str(tmp_path / "full.json")
+    # started from outside the checkout, with no PYTHONPATH of its own:
+    # bench.py must hand its root to Spark's Python workers itself
+    env.pop("PYTHONPATH", None)
     out = subprocess.run(
         [sys.executable, BENCH],
         capture_output=True,
         text=True,
         env=env,
+        cwd=tmp_path,
         timeout=600,
         check=True,
     )

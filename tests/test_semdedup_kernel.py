@@ -1,12 +1,19 @@
-"""The SemDeDup pair kernel (``similarity_queries._semdedup_edges``).
+"""The SemDeDup kernels (``similarity_queries._semdedup_edges`` and
+``_semdedup_closure``), which share one pair screen.
 
-One grouped Arrow kernel emits every within-cluster cosine edge for the
-coarse family (q231, q246, q260) and the learned one (q235).
+``_semdedup_edges`` emits every within-cluster cosine edge for the
+coarse family (q231, q246, q260); ``_semdedup_closure`` runs q235's
+pairs, components and keep rule in one grouped kernel.
 
-* On one cluster large enough to span three 512-row screen blocks, its
-  (u, v, cos_sim) rows equal a pure-Python left-fold cosine bit for
-  bit, including planted near-duplicates that straddle block
-  boundaries.
+* On one cluster large enough to span three 512-row screen blocks, the
+  edge kernel's (u, v, cos_sim) rows equal a pure-Python left-fold
+  cosine bit for bit, including planted near-duplicates that straddle
+  block boundaries.
+* On hand-built clusters the closure kernel's rows equal the
+  composition it replaces (edges → ``connected_components`` → keep
+  window): a long path, two components, a ``dist`` tie, two ``dist``
+  values above 2⁵³ one apart, and a cluster with no pair.
+* q235 materializes no edge or label table.
 * Over a zero-row embeddings table all four consumers return no rows.
 """
 
@@ -15,11 +22,18 @@ from __future__ import annotations
 import math
 import os
 import random
+from decimal import Decimal
 
+from pyspark.sql import Window
+from pyspark.sql import functions as F
+
+from data_engineering_examples_spark import scratch
+from data_engineering_examples_spark.operators.graph import connected_components
 from data_engineering_examples_spark.plans import all_specs
 from data_engineering_examples_spark.plans.similarity_queries import (
     DIM,
     SEMDEDUP_COS,
+    _semdedup_closure,
     _semdedup_edges,
 )
 from data_engineering_examples_spark.sources.tables import TABLES
@@ -72,6 +86,97 @@ def test_kernel_matches_python_left_fold_across_blocks(spark):
     for src, dst in planted:
         assert (min(ids[src], ids[dst]), max(ids[src], ids[dst])) in expected
     assert got == expected
+
+
+def _frame(spark, rows):
+    """``m`` for the closure kernel from (vec_id, cluster, dist, vec)."""
+    return spark.createDataFrame(
+        [(i, c, Decimal(d), v, math.sqrt(_fold(v, v))) for i, c, d, v in rows],
+        "vec_id long, cluster long, dist decimal(38,0), e array<double>, nrm double",
+    )
+
+
+def _cc_composition(m):
+    """q235's tail before the closure kernel: edges, then
+    ``connected_components``, then the keep window."""
+    edges = _semdedup_edges(m, SEMDEDUP_COS).select("u", "v")
+    nodes = (
+        edges.select(F.col("u").alias("id"))
+        .union(edges.select(F.col("v").alias("id")))
+        .distinct()
+    )
+    cc = connected_components(nodes, edges, scratch_prefix="test_semdedup_cc")
+    w_keep = Window.partitionBy("component").orderBy(F.desc("dist"), F.asc("vec_id"))
+    return (
+        cc.select(F.col("id").alias("vec_id"), F.col("cluster_id").alias("component"))
+        .join(m.select("vec_id", "cluster", "dist"), "vec_id")
+        .select(
+            "vec_id",
+            F.col("cluster").alias("cluster_id"),
+            "component",
+            (F.row_number().over(w_keep) == 1).alias("keep"),
+        )
+    )
+
+
+def _closure_rows(m):
+    """The kernel's rows, asserted equal to the CC composition's."""
+    got = sorted(map(tuple, _semdedup_closure(m, SEMDEDUP_COS).collect()))
+    assert got == sorted(map(tuple, _cc_composition(m).collect()))
+    return got
+
+
+def _unit(dim, *hot):
+    return [1.0 if d in hot else 0.0 for d in range(dim)]
+
+
+def test_closure_follows_a_long_path(spark):
+    # v_k = e_k + e_{k+1}: neighbours have cosine 1/2, every other pair 0,
+    # so the one component has diameter n - 1 and only neighbours pass
+    n = 121
+    ids = list(range(1000, 1000 + n))
+    random.Random(5).shuffle(ids)  # the least id sits mid-path
+    rows = [(ids[k], 3, 10 * k, _unit(n + 1, k, k + 1)) for k in range(n)]
+    got = _closure_rows(_frame(spark, rows))
+    assert len(got) == n
+    assert {r[2] for r in got} == {min(ids)}
+    assert [r[0] for r in got if r[3]] == [ids[-1]]  # the largest dist
+
+
+def test_closure_separates_two_components_in_one_cluster(spark):
+    # two near-duplicate families on orthogonal axes, plus loners
+    rows = [(i, 9, i, _unit(DIM, 0, 10 + i)) for i in (4, 2, 7)]
+    rows += [(i, 9, 100 - i, _unit(DIM, 1, 10 + i)) for i in (5, 3, 8)]
+    rows += [(i, 9, 0, _unit(DIM, 10 + i)) for i in (1, 6)]
+    got = _closure_rows(_frame(spark, rows))
+    assert {r[0]: r[2] for r in got} == {2: 2, 4: 2, 7: 2, 3: 3, 5: 3, 8: 3}
+    assert sorted(r[0] for r in got if r[3]) == [3, 7]
+
+
+def test_closure_breaks_a_dist_tie_to_the_lower_id(spark):
+    rows = [(i, 1, d, _unit(DIM, 0, 10 + i)) for i, d in ((8, 50), (6, 70), (9, 70))]
+    got = _closure_rows(_frame(spark, rows))
+    assert [r[0] for r in got if r[3]] == [6]
+
+
+def test_closure_orders_dists_above_2_pow_53_exactly(spark):
+    big = 2**60  # big and big + 1 are one double
+    assert float(big) == float(big + 1)
+    rows = [(1, 1, big, _unit(DIM, 0, 10)), (2, 1, big + 1, _unit(DIM, 0, 11))]
+    got = _closure_rows(_frame(spark, rows))
+    assert [r[0] for r in got if r[3]] == [2]
+
+
+def test_closure_emits_nothing_for_a_cluster_without_pairs(spark):
+    rows = [(i, 4, i, _unit(DIM, i)) for i in range(6)]
+    assert _closure_rows(_frame(spark, rows)) == []
+
+
+def test_q235_materializes_no_edge_or_label_table(spark):
+    q235 = all_specs()["q235_semantic_dedup_learned"]
+    assert q235.fn(spark, SF_SMOKE).collect()
+    names = set(scratch._MATERIALIZE_GEN)
+    assert not {n for n in names if n == "q235_edges" or n.startswith("q235_cc")}
 
 
 def test_semdedup_family_returns_no_rows_on_empty_embeddings(spark, tmp_path):

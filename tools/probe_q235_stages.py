@@ -16,12 +16,15 @@ probe therefore verifies, stage by stage:
                      (``_learned_assign``, the engine's code) match the
                      unrolled DuckDB rounds exactly;
   3. edge set      — the within-cluster cosine pairs from the Arrow
-                     kernel match DuckDB's fold-based pair join exactly.
+                     kernel match DuckDB's fold-based pair join exactly;
+  4. closure       — q235's own output (vec_id, cluster_id, component,
+                     keep), from the grouped kernel that fuses pairs,
+                     components and keep rule, matches a Python
+                     union-find over DuckDB's stage-3 edges with the
+                     keep rule applied to stage 2's exact ``dist``.
 
-Downstream of the edge set, q235 is connected_components (fixpoint-
-verified by q72/q131's recursive-CTE oracles and the r9 sf1 sweep) plus
-a partitioned window — both covered elsewhere.  Green stages 1-3 at a
-given SF mean the monolithic oracle would match if it could run.
+Green stages 1-4 at a given SF mean the monolithic oracle would match
+if it could run.
 
 ``staged_check()`` is the library entry point: tools/check_oracle.py
 calls it for q235 whenever the monolithic N·DIM·K join volume exceeds
@@ -60,7 +63,7 @@ def q235_monolithic_cells(con, table: str = "embeddings") -> int:
 
 
 def staged_check(spark, sf_dir: str, verbose: bool = False) -> list:
-    """Run the three-stage q235 parity probe; return a list of problem
+    """Run the four-stage q235 parity probe; return a list of problem
     strings (empty == all stages match). Creates its own DuckDB
     connection — the stages are heavy enough that sharing a caller's
     connection would keep its temps alive across stages, which is the
@@ -188,6 +191,39 @@ def staged_check(spark, sf_dir: str, verbose: bool = False) -> list:
         return problems
     if verbose:
         print(f"stage 3 edges: OK ({len(e_spark)} edges)")
+
+    # --- stage 4: closure ----------------------------------------------
+    parent: dict = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for u, v in e_duck:
+        ru, rv = find(u), find(v)
+        parent[max(ru, rv)] = min(ru, rv)  # the root is the least id
+    keeper: dict = {}
+    for x in sorted(parent):  # ascending id: a dist tie keeps the lower
+        c = find(x)
+        if c not in keeper or int(a_duck[x][1]) > int(a_duck[keeper[c]][1]):
+            keeper[c] = x
+    c_duck = {
+        x: (a_duck[x][0], find(x), keeper[find(x)] == x) for x in parent
+    }
+    c_spark = {
+        r.vec_id: (r.cluster_id, r.component, r.keep)
+        for r in sq.q235_semantic_dedup_learned(spark, sf_dir).collect()
+    }
+    if c_spark != c_duck:
+        n_bad = len(set(c_spark) ^ set(c_duck)) + sum(
+            1 for k in c_spark if k in c_duck and c_spark[k] != c_duck[k]
+        )
+        problems.append(f"stage 4 closure differs on {n_bad} vectors")
+        return problems
+    if verbose:
+        print(f"stage 4 closure: OK ({len(c_spark)} members)")
     return problems
 
 

@@ -177,7 +177,7 @@ def staged_q210(spark, sf_dir: str) -> list:
     return problems
 
 
-# --- q235: staged seeds/assignment/edges probe ------------------------------
+# --- q235: staged seeds/assignment/edges/closure probe ----------------------
 
 
 def q235_needs_staged(con) -> bool:
