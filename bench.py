@@ -52,8 +52,7 @@ import statistics
 import sys
 import time
 
-ROOT = os.path.dirname(os.path.abspath(__file__))
-sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from data_engineering_examples_spark.plans import all_specs  # noqa: E402
 from data_engineering_examples_spark.session import get_spark  # noqa: E402
@@ -143,13 +142,6 @@ def main() -> None:
                 f"data_engineering_examples_spark/plans (see CAPABILITIES.md)"
             )
         specs = {n: specs[n] for n in names}
-    # Spark's Python workers import the package as well, and they see
-    # PYTHONPATH, not this process's sys.path: without it a run started
-    # from another directory fails in the first worker that unpickles a
-    # function of the package (the ods_zip warm-up below)
-    os.environ["PYTHONPATH"] = os.pathsep.join(
-        [ROOT] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
-    )
     spark = get_spark("bench")
 
     # warm-up: JVM, codegen, parquet footer caches

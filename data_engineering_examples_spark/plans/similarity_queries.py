@@ -27,7 +27,7 @@ learned ones) uses Arrow-batched ``applyInPandas`` kernels over one
 screen — a BLAS matmul candidate screen with a rigorous error margin,
 then the EXACT left-to-right fold re-evaluated on the boundary band —
 because the interpreted higher-order fold costs ~140µs per pair (see
-``_semdedup_edges``).
+``_semdedup_screen``).
 """
 
 from __future__ import annotations
@@ -2360,7 +2360,18 @@ def _semdedup_screen(emb, nrm, threshold: float):
     """``(i, j, cos)``: the row pairs ``i < j`` of ONE cluster (``emb``
     its n×DIM block, ``nrm`` its norms) whose exact left-fold cosine is
     ``>= threshold`` — the one pair screen of both SemDeDup kernels
-    (``_semdedup_edges``, ``_semdedup_closure``)."""
+    (``_semdedup_edges``, ``_semdedup_closure``).
+
+    BLAS computes all pairwise dots, and only the pairs inside the
+    screen band (``_SEMDEDUP_SCREEN_SLACK``) re-run the exact
+    sequential fold that defines the predicate — bit-identical to the
+    JVM/DuckDB fold, which numpy ``cumsum`` reproduces (element
+    products are single IEEE ops; cumsum accumulates strictly
+    left-to-right).  Each kernel runs a cluster as one task, so the
+    dominant cluster's O(n²) screen is single-task, ~50ms per
+    1.6k×1.6k cluster; callers seed K ~ sqrt(N) clusters
+    (``_semdedup_seed_frame``), but q235's Lloyd rounds can still grow
+    one cluster to most of the corpus."""
     import numpy as np
 
     n = len(nrm)
@@ -2397,30 +2408,12 @@ def _semdedup_screen(emb, nrm, threshold: float):
 
 
 def _semdedup_edges(m: DataFrame, threshold: float) -> DataFrame:
-    """Within-cluster cosine edges (u < v, cos_sim >= ``threshold``) via
-    a grouped Arrow kernel over ``_semdedup_screen`` — the coarse
-    family's pair list (``_coarse_semdedup_pairs``).
-
-    ``m`` holds one row per vector: (vec_id, cluster, e: array<double>,
-    nrm: double).  The JVM formulation — self-join on cluster + the
-    higher-order ``aggregate(zip_with(...))`` fold per pair — is
-    interpreted (CodegenFallback), ~140µs/pair·core measured at sf0.1;
-    with one Lloyd round collapsing 80% of vectors into one cluster the
-    1.3M candidate pairs cost ~6s.  Here each cluster ships ONCE
-    (N rows total, not N² pair rows), BLAS computes all pairwise dots,
-    and only the pairs inside the screen band (see
-    ``_SEMDEDUP_SCREEN_SLACK``) re-run the exact sequential fold that
-    defines the predicate — bit-identical to the JVM/DuckDB fold, which
-    numpy ``cumsum`` reproduces (element products are single IEEE ops;
-    cumsum accumulates strictly left-to-right).  ``cos_sim`` is that
-    exact fold divided by ``nrm_u * nrm_v``, the value q260 cuts on.
-
-    Scale note: one group = one task, so the dominant cluster's O(n²)
-    screen runs single-task — but as a row-blocked dgemm, ~50ms per
-    1.6k×1.6k cluster.  Both kernels' callers seed K ~ sqrt(N) clusters
-    (``_semdedup_seed_frame``); q235's Lloyd rounds can still grow one
-    cluster to most of the corpus.
-    """
+    """Within-cluster cosine edges (u < v, cos_sim >= ``threshold``), the
+    coarse family's pair list (``_coarse_semdedup_pairs``): one grouped
+    Arrow kernel over ``_semdedup_screen``.  ``m`` holds one row per
+    vector, (vec_id, cluster, e: array<double>, nrm: double), so each
+    cluster ships once (N rows, not N² pair rows).  ``cos_sim`` is the
+    exact fold over ``nrm_u * nrm_v``, the value q260 cuts on."""
     import numpy as np
     import pandas as pd
 

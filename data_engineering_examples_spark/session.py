@@ -30,8 +30,17 @@ def get_spark(
     shuffle partition).
 
     Cores: ``cpus``, else ``SPARK_GRAFT_CPUS``, else the cores this
-    process may run on.
+    process may run on.  The checkout is put on ``PYTHONPATH``, so a
+    caller started from any directory reaches the package in its
+    Python workers.
     """
+    # Spark's Python workers import this package too, and they see
+    # PYTHONPATH, not this process's sys.path: put the checkout on it
+    # before the JVM, whose environment every worker inherits, starts
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    path = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if root not in path:
+        os.environ["PYTHONPATH"] = os.pathsep.join([root, *path])
     cpus = str(
         cpus
         or os.environ.get("SPARK_GRAFT_CPUS")

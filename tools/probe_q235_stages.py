@@ -17,11 +17,12 @@ probe therefore verifies, stage by stage:
                      unrolled DuckDB rounds exactly;
   3. edge set      — the within-cluster cosine pairs from the Arrow
                      kernel match DuckDB's fold-based pair join exactly;
-  4. closure       — q235's own output (vec_id, cluster_id, component,
-                     keep), from the grouped kernel that fuses pairs,
-                     components and keep rule, matches a Python
-                     union-find over DuckDB's stage-3 edges with the
-                     keep rule applied to stage 2's exact ``dist``.
+  4. closure       — (vec_id, cluster_id, component, keep) from the
+                     grouped kernel q235 returns (``_semdedup_closure``:
+                     pairs, components and keep rule fused), run over
+                     stage 3's assignment, match a Python union-find
+                     over DuckDB's stage-3 edges with the keep rule
+                     applied to stage 2's exact ``dist``.
 
 Green stages 1-4 at a given SF mean the monolithic oracle would match
 if it could run.
@@ -214,7 +215,8 @@ def staged_check(spark, sf_dir: str, verbose: bool = False) -> list:
     }
     c_spark = {
         r.vec_id: (r.cluster_id, r.component, r.keep)
-        for r in sq.q235_semantic_dedup_learned(spark, sf_dir).collect()
+        # q235's body is this call over the same join, materialized above
+        for r in sq._semdedup_closure(m, sq.SEMDEDUP_COS).collect()
     }
     if c_spark != c_duck:
         n_bad = len(set(c_spark) ^ set(c_duck)) + sum(
