@@ -14,9 +14,9 @@ iterative job that loses all progress on one lost executor is not a
 cluster algorithm).
 
 Used by q72 (dedup clusters over exact+LSH edges), q131 (patient
-record-linkage clusters), q226 (perceptual image clusters) and q231
-(coarse SemDeDup groups); the loop runs to its probed fixpoint, and the
-callers' recursive-CTE oracles check the resulting components.
+record-linkage clusters) and q226 (perceptual image clusters); the loop
+runs to its probed fixpoint, and the callers' recursive-CTE oracles
+check the resulting components.
 """
 
 from __future__ import annotations
@@ -72,9 +72,9 @@ def connected_components(
     scratch module's wipe-per-call space-reuse contract)."""
     # explode, not self-union: a union evaluates the caller's edge plan
     # TWICE inside the one materialization job (and the edge list often
-    # comes out of an expensive candidate pipeline — q231's Arrow pair
-    # kernel, q131's blocked self-join); the two-struct explode emits
-    # both directions from a SINGLE evaluation (guide §2.4).
+    # comes out of an expensive candidate pipeline — q72's exact-hash
+    # and LSH edge union, q131's blocked self-join); the two-struct
+    # explode emits both directions from a SINGLE evaluation (guide §2.4).
     bidir = materialize(
         edges.select(
             F.explode(

@@ -68,20 +68,6 @@ _DUCK_TRIGRAMS = (
 )
 
 
-def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct (doc_id, shingle) pairs — the shared candidate substrate.
-
-    At 100 TB this substrate is materialized once (bucketed by shingle
-    hash) rather than recomputed per consumer; the query plans here stay
-    pure/declarative and recompute it, which AQE handles fine at test SF."""
-    docs = load_tables(spark, sf_dir, ["documents"])["documents"]
-    tokens = F.split(docs.text, " ")
-    return (
-        docs.select("doc_id", F.explode(_word_trigrams(tokens)).alias("shingle"))
-        .distinct()
-    )
-
-
 def _hashed_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, sh) with the shingle reduced to a 60-bit md5 int BEFORE the
     distinct/shuffle: the exchange and join keys carry 8 bytes instead of
@@ -127,11 +113,6 @@ def _hashed_shingles_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return pos.select("doc_id", _md5_int(shingle).alias("sh")).distinct()
 
-
-_DUCK_SHINGLES = f"""
-  tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-  sh AS (SELECT DISTINCT doc_id, unnest({_DUCK_TRIGRAMS}) AS shingle FROM tok)
-"""
 
 _DUCK_HASHED_SHINGLES = f"""
   tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),

@@ -2107,8 +2107,8 @@ def q230_embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rounds), compute pairwise cosine ONLY
 # within a cluster (the paper's trick: k clusters cut the all-pairs
 # O(N²) to O(N²/k) with no recall loss inside a cluster), connect pairs
-# ≥ SEMDEDUP_COS into duplicate groups (transitive closure — same CC
-# operator as q72), and KEEP the group member with the LOWEST cosine to
+# ≥ SEMDEDUP_COS into duplicate groups (transitive closure within the
+# cluster), and KEEP the group member with the LOWEST cosine to
 # its centroid (the paper keeps low-centroid-similarity examples: they
 # sit nearest the cluster boundary and carry the most diversity).
 #
@@ -2116,15 +2116,15 @@ def q230_embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # * Centroid assignment is a broadcast cross join (K·N cosines,
 #   map-side) — the big table never shuffles for the assign.
 # * The pairwise stage shuffles once on cent_id and runs each cluster
-#   through the grouped Arrow kernel (_semdedup_edges, whose screen
-#   q235 shares); K IS sized ceil(sqrt(N)) (r12 — the r11 sf10 probe measured
-#   the old fixed-16 variant at 55-97× per decade, the (N/K)² pair
-#   wall; with K ~ √N per-cluster pair work grows linearly). Norms are
-#   computed ONCE per vector and ship with it.
-# * CC over dup-group members only (nodes = edge endpoints, a tiny
-#   fraction of the corpus), pointer-jumping rounds to the probed
-#   fixpoint through the durable scratch seam as in q72; the
-#   recursive-CTE oracle checks the resulting components.
+#   through one grouped Arrow kernel for pairs, closure and keep rule
+#   (_semdedup_closure, q235's); K IS sized ceil(sqrt(N)) (r12 — the
+#   r11 sf10 probe measured the old fixed-16 variant at 55-97× per
+#   decade, the (N/K)² pair wall; with K ~ √N per-cluster pair work
+#   grows linearly). Norms are computed ONCE per vector and ship with
+#   it.
+# * No edge crosses a cluster, so each group labels its own components
+#   in memory, with no edge or label table written; the recursive-CTE
+#   oracle checks the resulting components.
 #
 # Float determinism: cosines are div/mul/sqrt over the left-fold double
 # dot (module docstring) — all correctly-rounded IEEE ops, bit-identical
@@ -2164,8 +2164,8 @@ def _coarse_semdedup_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5-ranked seed vectors of ``_semdedup_seed_frame`` — the
     corpus-relative K that keeps per-cluster pair work ~linear in N
     (r12; the old fixed-16 seed set made the pair stage (N/16)²).
-    Memoized per (session, sf_dir): q231 and q246 share this K·N cosine
-    scan."""
+    Memoized per (session, sf_dir): q231, q246 and q260 share this K·N
+    cosine scan."""
 
     def build() -> DataFrame:
         emb = scale_out(load_tables(spark, sf_dir, ["embeddings"])["embeddings"])
@@ -2200,10 +2200,10 @@ def _coarse_semdedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     old fixed-16-seed variants of q231/q246 at 1511s + 1625s rebuilding
     this same pair list independently; r12 wires K = ceil(√N) so the
     per-cluster pair count stays bounded as the corpus grows).  The
-    pairs come from ``_semdedup_edges``, the kernel q235 runs over its
-    learned clusters, with ``cent_id`` as the cluster.  Memoized per
-    (session, sf_dir) so q231, q246 and q260 pay the quadratic
-    within-cluster scan once."""
+    pairs come from ``_semdedup_edges``, whose screen the closure kernel
+    (q231, q235) shares, with ``cent_id`` as the cluster.  Memoized per
+    (session, sf_dir) so q246 and q260 pay the quadratic within-cluster
+    scan once."""
 
     def build() -> DataFrame:
         assign = _coarse_semdedup_assign(spark, sf_dir)
@@ -2277,37 +2277,34 @@ def _duck_semdedup_oracle() -> str:
 @register(
     "q231_semantic_dedup",
     oracle=_duck_semdedup_oracle(),
-    doc="SemDeDup: within-centroid-cluster cosine groups (CC), keep the "
-    "lowest-centroid-similarity member per semantic-duplicate group",
+    doc="SemDeDup: within-centroid-cluster cosine groups (cluster-local "
+    "closure), keep the lowest-centroid-similarity member per "
+    "semantic-duplicate group",
     tags=("similarity", "dedup", "llm", "graph", "iterative"),
 )
 def q231_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # assignment and pair list are MEMOIZED substrates shared with q246
-    # and q260 (r11): the pair kernel runs inside the substrate build,
-    # and this query is a pure consumer: CC over the edge set plus the
-    # keep-rule window.
+    # the assignment is a MEMOIZED substrate (q246/q260's pairs read it
+    # too).  No edge crosses a coarse cluster, so q235's closure kernel
+    # runs pairs, components and keep rule per cent_id.  Negation is
+    # exact, so the largest -cent_cos (ties to the lower vec_id) is the
+    # keep rule's (cent_cos ASC, vec_id ASC) first row.
     assign = _coarse_semdedup_assign(spark, sf_dir)
-    edges = _coarse_semdedup_pairs(spark, sf_dir).select("u", "v")
-    nodes = (
-        edges.select(F.col("u").alias("id"))
-        .union(edges.select(F.col("v").alias("id")))
-        .distinct()
-    )
-    from ..operators.graph import connected_components
-
-    cc = connected_components(nodes, edges, scratch_prefix="q231_cc")
-    w_keep = Window.partitionBy("component").orderBy(
-        F.asc("cent_cos"), F.asc("vec_id")
+    m = assign.select(
+        "vec_id",
+        F.col("cent_id").alias("cluster"),
+        (-F.col("cent_cos")).alias("key"),
+        "e",
+        "nrm",
     )
     return (
-        cc.select(F.col("id").alias("vec_id"), F.col("cluster_id").alias("component"))
-        .join(assign.select("vec_id", "cent_id", "cent_cos"), "vec_id")
+        _semdedup_closure(m, SEMDEDUP_COS)
+        .join(assign.select("vec_id", "cent_cos"), "vec_id")
         .select(
             "vec_id",
-            "cent_id",
+            F.col("cluster_id").alias("cent_id"),
             "component",
             "cent_cos",
-            (F.row_number().over(w_keep) == 1).alias("keep"),
+            "keep",
         )
     )
 
@@ -2433,19 +2430,20 @@ def _semdedup_edges(m: DataFrame, threshold: float) -> DataFrame:
 
 
 def _semdedup_closure(m: DataFrame, threshold: float) -> DataFrame:
-    """``(vec_id, cluster_id, component, keep)`` per edge endpoint: q235's
-    pairs, closure and keep rule in one grouped kernel over ``m`` =
-    (vec_id, cluster, dist, e, nrm).  No edge crosses a cluster, so each
-    group labels its own components: min-label propagation with pointer
-    jumping, to its fixpoint, over vec_id-sorted rows, so a component's
-    label is its least vec_id.  ``keep`` marks the largest ``dist``, ties
-    to the lower vec_id; ``dist`` exceeds 2⁵³, so it stays a Decimal."""
+    """``(vec_id, cluster_id, component, keep)`` per edge endpoint: the
+    SemDeDup pairs, closure and keep rule (q231, q235) in one grouped
+    kernel over ``m`` = (vec_id, cluster, key, e, nrm).  No edge crosses
+    a cluster, so each group labels its own components: min-label
+    propagation with pointer jumping, to its fixpoint, over
+    vec_id-sorted rows, so a component's label is its least vec_id.
+    ``keep`` marks the largest ``key``, ties to the lower vec_id; q235's
+    key (its ``dist``) exceeds 2⁵³, so it stays a Decimal."""
     import numpy as np
     import pandas as pd
 
     def closure(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("vec_id")
-        ids, dist = pdf["vec_id"].to_numpy(), pdf["dist"].to_numpy()
+        ids, key = pdf["vec_id"].to_numpy(), pdf["key"].to_numpy()
         i, j, _ = _semdedup_screen(
             np.vstack(pdf["e"]), pdf["nrm"].to_numpy("float64"), threshold
         )
@@ -2458,7 +2456,7 @@ def _semdedup_closure(m: DataFrame, threshold: float) -> DataFrame:
         rows = np.unique(np.concatenate([i, j]))  # ascending vec_id
         best: dict = {}
         for r in rows.tolist():  # strict ">": a tie stays with the lower id
-            if label[r] not in best or dist[r] > dist[best[label[r]]]:
+            if label[r] not in best or key[r] > key[best[label[r]]]:
                 best[label[r]] = r
         return pd.DataFrame({
             "vec_id": ids[rows],
@@ -2467,7 +2465,7 @@ def _semdedup_closure(m: DataFrame, threshold: float) -> DataFrame:
             "keep": [best[label[r]] == r for r in rows.tolist()],
         })
 
-    return m.select("vec_id", "cluster", "dist", "e", "nrm").groupBy(
+    return m.select("vec_id", "cluster", "key", "e", "nrm").groupBy(
         "cluster"
     ).applyInPandas(closure, "vec_id long, cluster_id long, component long, keep boolean")
 
@@ -2582,7 +2580,8 @@ def q235_semantic_dedup_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
     vn = emb.select("vec_id", _to_double("embedding").alias("e")).withColumn(
         "nrm", F.sqrt(_dot(F.col("e"), F.col("e")))
     )
-    return _semdedup_closure(learned.join(vn, "vec_id"), SEMDEDUP_COS)
+    m = learned.withColumnRenamed("dist", "key").join(vn, "vec_id")
+    return _semdedup_closure(m, SEMDEDUP_COS)
 
 
 # ---------------------------------------------------------------------------
@@ -2675,7 +2674,7 @@ def q246_paraphrase_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup_queries import _hashed_shingles
 
     # semantic candidates come from the MEMOIZED coarse-seed pair
-    # substrate shared with q231 and q260 (r11; K = ceil(sqrt(N)) since
+    # substrate shared with q260 (r11; K = ceil(sqrt(N)) since
     # r12) — one scratch-parquet scan (the r11 sf10 probe measured q231
     # and this query independently rebuilding this list at 1511s + 1625s)
     sem = _coarse_semdedup_pairs(spark, sf_dir).select(

@@ -75,9 +75,9 @@ ACTION_SEAMS = {
         "operators/graph.py",
         "connected_components",
         "first",
-    ): "one-row fixpoint probe: count of still-unstable labels after the "
-    "bounded propagation rounds, used only to fail loudly if the hard "
-    "cap was insufficient",
+    ): "one-row fixpoint probe after EVERY round: the exact DECIMAL sum "
+    "of the labels just materialized; labels only decrease, so an "
+    "unchanged sum means converged, and hitting the hard cap raises",
     (
         "plans/training_queries.py",
         "q240_linear_probe_gd",

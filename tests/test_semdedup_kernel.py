@@ -1,9 +1,9 @@
 """The SemDeDup kernels (``similarity_queries._semdedup_edges`` and
 ``_semdedup_closure``), which share one pair screen.
 
-``_semdedup_edges`` emits every within-cluster cosine edge for the
-coarse family (q231, q246, q260); ``_semdedup_closure`` runs q235's
-pairs, components and keep rule in one grouped kernel.
+``_semdedup_edges`` emits every within-cluster cosine edge for q246 and
+q260; ``_semdedup_closure`` runs q231's and q235's pairs, components
+and keep rule in one grouped kernel.
 
 * On one cluster large enough to span three 512-row screen blocks, the
   edge kernel's (u, v, cos_sim) rows equal a pure-Python left-fold
@@ -12,8 +12,10 @@ pairs, components and keep rule in one grouped kernel.
 * On hand-built clusters the closure kernel's rows equal the
   composition it replaces (edges → ``connected_components`` → keep
   window): a long path, two components, a ``dist`` tie, two ``dist``
-  values above 2⁵³ one apart, and a cluster with no pair.
-* q235 materializes no edge or label table.
+  values above 2⁵³ one apart, and a cluster with no pair.  Each case
+  runs in q235's shape (a Decimal ``dist`` kept largest) and in q231's
+  (a double ``cent_cos`` kept lowest through ``key = -cent_cos``).
+* q231 and q235 materialize no edge or label table.
 * Over a zero-row embeddings table all four consumers return no rows.
 """
 
@@ -24,6 +26,7 @@ import os
 import random
 from decimal import Decimal
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -88,17 +91,29 @@ def test_kernel_matches_python_left_fold_across_blocks(spark):
     assert got == expected
 
 
-def _frame(spark, rows):
-    """``m`` for the closure kernel from (vec_id, cluster, dist, vec)."""
+def _frame(spark, rows, shape):
+    """``m`` for the closure kernel from (vec_id, cluster, dist, vec), in
+    q235's shape (``key`` is the Decimal ``dist``) or q231's (``key`` is
+    ``-cent_cos``, a double that falls as ``dist`` rises, through zero,
+    and is equal on equal ``dist``)."""
+    nrm = {i: math.sqrt(_fold(v, v)) for i, _, _, v in rows}
+    if shape == "q235":
+        return spark.createDataFrame(
+            [(i, c, Decimal(d), v, nrm[i]) for i, c, d, v in rows],
+            "vec_id long, cluster long, key decimal(38,0), e array<double>, "
+            "nrm double",
+        )
+    rank = {d: r for r, d in enumerate(sorted({d for _, _, d, _ in rows}))}
     return spark.createDataFrame(
-        [(i, c, Decimal(d), v, math.sqrt(_fold(v, v))) for i, c, d, v in rows],
-        "vec_id long, cluster long, dist decimal(38,0), e array<double>, nrm double",
-    )
+        [(i, c, 1.0 - rank[d] / 64, v, nrm[i]) for i, c, d, v in rows],
+        "vec_id long, cluster long, cent_cos double, e array<double>, nrm double",
+    ).withColumn("key", -F.col("cent_cos"))
 
 
-def _cc_composition(m):
-    """q235's tail before the closure kernel: edges, then
-    ``connected_components``, then the keep window."""
+def _cc_composition(m, shape):
+    """The tail the closure kernel replaced: edges, then
+    ``connected_components``, then the caller's keep window (q235:
+    ``dist DESC``; q231: ``cent_cos ASC``; ties to the lower vec_id)."""
     edges = _semdedup_edges(m, SEMDEDUP_COS).select("u", "v")
     nodes = (
         edges.select(F.col("u").alias("id"))
@@ -106,10 +121,11 @@ def _cc_composition(m):
         .distinct()
     )
     cc = connected_components(nodes, edges, scratch_prefix="test_semdedup_cc")
-    w_keep = Window.partitionBy("component").orderBy(F.desc("dist"), F.asc("vec_id"))
+    order = F.desc("key") if shape == "q235" else F.asc("cent_cos")
+    w_keep = Window.partitionBy("component").orderBy(order, F.asc("vec_id"))
     return (
         cc.select(F.col("id").alias("vec_id"), F.col("cluster_id").alias("component"))
-        .join(m.select("vec_id", "cluster", "dist"), "vec_id")
+        .join(m.drop("e", "nrm"), "vec_id")
         .select(
             "vec_id",
             F.col("cluster").alias("cluster_id"),
@@ -119,11 +135,16 @@ def _cc_composition(m):
     )
 
 
-def _closure_rows(m):
-    """The kernel's rows, asserted equal to the CC composition's."""
-    got = sorted(map(tuple, _semdedup_closure(m, SEMDEDUP_COS).collect()))
-    assert got == sorted(map(tuple, _cc_composition(m).collect()))
-    return got
+def _closure_rows(spark, rows):
+    """The kernel's rows over both callers' shapes of ``rows``, each
+    asserted equal to its CC composition's; the two shapes agree."""
+    got = {}
+    for shape in ("q235", "q231"):
+        m = _frame(spark, rows, shape)
+        got[shape] = sorted(map(tuple, _semdedup_closure(m, SEMDEDUP_COS).collect()))
+        assert got[shape] == sorted(map(tuple, _cc_composition(m, shape).collect()))
+    assert got["q231"] == got["q235"]
+    return got["q235"]
 
 
 def _unit(dim, *hot):
@@ -137,7 +158,7 @@ def test_closure_follows_a_long_path(spark):
     ids = list(range(1000, 1000 + n))
     random.Random(5).shuffle(ids)  # the least id sits mid-path
     rows = [(ids[k], 3, 10 * k, _unit(n + 1, k, k + 1)) for k in range(n)]
-    got = _closure_rows(_frame(spark, rows))
+    got = _closure_rows(spark, rows)
     assert len(got) == n
     assert {r[2] for r in got} == {min(ids)}
     assert [r[0] for r in got if r[3]] == [ids[-1]]  # the largest dist
@@ -148,14 +169,14 @@ def test_closure_separates_two_components_in_one_cluster(spark):
     rows = [(i, 9, i, _unit(DIM, 0, 10 + i)) for i in (4, 2, 7)]
     rows += [(i, 9, 100 - i, _unit(DIM, 1, 10 + i)) for i in (5, 3, 8)]
     rows += [(i, 9, 0, _unit(DIM, 10 + i)) for i in (1, 6)]
-    got = _closure_rows(_frame(spark, rows))
+    got = _closure_rows(spark, rows)
     assert {r[0]: r[2] for r in got} == {2: 2, 4: 2, 7: 2, 3: 3, 5: 3, 8: 3}
     assert sorted(r[0] for r in got if r[3]) == [3, 7]
 
 
 def test_closure_breaks_a_dist_tie_to_the_lower_id(spark):
     rows = [(i, 1, d, _unit(DIM, 0, 10 + i)) for i, d in ((8, 50), (6, 70), (9, 70))]
-    got = _closure_rows(_frame(spark, rows))
+    got = _closure_rows(spark, rows)
     assert [r[0] for r in got if r[3]] == [6]
 
 
@@ -163,20 +184,23 @@ def test_closure_orders_dists_above_2_pow_53_exactly(spark):
     big = 2**60  # big and big + 1 are one double
     assert float(big) == float(big + 1)
     rows = [(1, 1, big, _unit(DIM, 0, 10)), (2, 1, big + 1, _unit(DIM, 0, 11))]
-    got = _closure_rows(_frame(spark, rows))
+    got = _closure_rows(spark, rows)
     assert [r[0] for r in got if r[3]] == [2]
 
 
 def test_closure_emits_nothing_for_a_cluster_without_pairs(spark):
     rows = [(i, 4, i, _unit(DIM, i)) for i in range(6)]
-    assert _closure_rows(_frame(spark, rows)) == []
+    assert _closure_rows(spark, rows) == []
 
 
-def test_q235_materializes_no_edge_or_label_table(spark):
-    q235 = all_specs()["q235_semantic_dedup_learned"]
-    assert q235.fn(spark, SF_SMOKE).collect()
+@pytest.mark.parametrize(
+    "name", ["q231_semantic_dedup", "q235_semantic_dedup_learned"]
+)
+def test_semdedup_materializes_no_edge_or_label_table(spark, name):
+    assert all_specs()[name].fn(spark, SF_SMOKE).collect()
+    q = name.split("_")[0]
     names = set(scratch._MATERIALIZE_GEN)
-    assert not {n for n in names if n == "q235_edges" or n.startswith("q235_cc")}
+    assert not {n for n in names if n == f"{q}_edges" or n.startswith(f"{q}_cc")}
 
 
 def test_semdedup_family_returns_no_rows_on_empty_embeddings(spark, tmp_path):

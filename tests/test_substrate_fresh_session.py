@@ -15,7 +15,7 @@ Substrates covered (scratch.memo_substrate call sites):
   q24_lsh_pairs          dedup_queries.py   -> q72, q95, q228, q238, ...
   q72_membership         dedup_queries.py   -> q247, q250, q255, q256
   semdedup_coarse_assign similarity_queries -> q231, q246
-  semdedup_coarse_pairs  similarity_queries -> q231, q246
+  semdedup_coarse_pairs  similarity_queries -> q246, q260
 """
 
 from __future__ import annotations

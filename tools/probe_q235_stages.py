@@ -167,7 +167,9 @@ def staged_check(spark, sf_dir: str, verbose: bool = False) -> list:
     vn = emb.select("vec_id", sq._to_double("embedding").alias("e")).withColumn(
         "nrm", F.sqrt(sq._dot(F.col("e"), F.col("e")))
     )
-    m = materialize(final.join(vn, "vec_id"), "probe235_assign")
+    m = materialize(
+        final.withColumnRenamed("dist", "key").join(vn, "vec_id"), "probe235_assign"
+    )
     e_spark = {(r.u, r.v) for r in sq._semdedup_edges(m, sq.SEMDEDUP_COS).collect()}
     e_duck = {
         (r[0], r[1])
