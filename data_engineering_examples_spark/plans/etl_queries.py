@@ -862,10 +862,11 @@ def q185_ods_zip_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..scratch import scratch_dir
     from ..sources import ods_datasource
+    from ..streaming.drain import drain
 
     ods_datasource.register(spark)
     base = scratch_dir("q185_ods_feed")
-    feed, out, ck = f"{base}/feed", f"{base}/out", f"{base}/ckpt"
+    feed = f"{base}/feed"
     # scratch_dir() wipes per call: the two-drop feed is rebuilt on
     # every invocation (tiny CSV zips; the drain is the measured work)
     lines = open(_EP_CSV).read().splitlines(keepends=True)
@@ -878,25 +879,9 @@ def q185_ods_zip_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         z.writestr("m1.csv", "".join(lines[half : half + quarter]))
         z.writestr("m2.csv", "".join(lines[half + quarter :]))
 
-    # fresh drain per run: the query's contract is "the feed so far"
-    import shutil
-
-    shutil.rmtree(out, ignore_errors=True)
-    shutil.rmtree(ck, ignore_errors=True)
-    q = (
-        spark.readStream.format("ods_zip")
-        .load(feed)
-        .writeStream.foreachBatch(
-            lambda df, _bid: df.write.mode("append").parquet(out)
-        )
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
+    stream = spark.readStream.format("ods_zip").load(feed)
     return (
-        spark.read.parquet(out)
+        drain(stream, f"{base}/ckpt", f"{base}/out")
         .groupBy("national_grouping")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_orgs"),
@@ -1128,6 +1113,7 @@ def q207_ods_zip_stream_write(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..scratch import scratch_dir
     from ..sources import ods_datasource
+    from ..streaming.drain import drain
 
     ods_datasource.register(spark)
     base = scratch_dir("q207_stream_write")
@@ -1149,20 +1135,11 @@ def q207_ods_zip_stream_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination()
 
-    out = f"{base}/back"
-    q2 = (
-        spark.readStream.format("ods_zip")
-        .schema(src.schema)
-        .load(feed)
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", f"{base}/ckpt_r")
-        .trigger(availableNow=True)
-        .start()
+    back = drain(
+        spark.readStream.format("ods_zip").schema(src.schema).load(feed),
+        f"{base}/ckpt_r",
+        f"{base}/back",
     )
-    q2.awaitTermination()
-
-    back = spark.read.schema(src.schema).parquet(out)
     return (
         back.filter(F.col("national_grouping").isNotNull())
         .groupBy("national_grouping")

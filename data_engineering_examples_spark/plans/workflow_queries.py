@@ -443,10 +443,11 @@ def q83_stateful_progress(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import Window
     from ..scratch import scratch_dir
+    from ..streaming.drain import drain
     from ..streaming.tasks import TASK_SCHEMA, task_progress_stateful
 
     base = scratch_dir("q83_stream")
-    inp, out = f"{base}/in", f"{base}/out"
+    inp = f"{base}/in"
     _os.makedirs(inp)
     # two identical files = an at-least-once redelivery of every task
     shutil.copy(f"{FX}/tasks.parquet", f"{inp}/delivery_a.parquet")
@@ -458,27 +459,10 @@ def q83_stateful_progress(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(inp)
     )
     # the task queue is small by nature (a poll page, not a corpus):
-    # fewer state-store partitions cut per-batch fixed overhead; the
-    # checkpoint pins the choice per query, and the session conf is
-    # restored for the analytic queries that share it
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            task_progress_stateful(stream)
-            .writeStream.foreachBatch(
-                lambda df, _bid: df.write.mode("append").parquet(out)
-            )
-            .outputMode("update")
-            .option("checkpointLocation", f"{base}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-    emissions = spark.read.parquet(out)
+    # fewer state-store partitions cut per-batch fixed overhead
+    emissions = drain(
+        task_progress_stateful(stream), f"{base}/ckpt", f"{base}/out", partitions=4
+    )
     last = Window.partitionBy("id").orderBy(F.desc("n_updates"))
     return (
         emissions.withColumn("_rn", F.row_number().over(last))
@@ -515,10 +499,11 @@ def q84_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from ..scratch import scratch_dir
+    from ..streaming.drain import drain
     from ..streaming.tasks import TASK_SCHEMA, dedup_stream
 
     base = scratch_dir("q84_stream")
-    inp, out = f"{base}/in", f"{base}/out"
+    inp = f"{base}/in"
     _os.makedirs(inp)
     shutil.copy(f"{FX}/tasks.parquet", f"{inp}/delivery_a.parquet")
     shutil.copy(f"{FX}/tasks.parquet", f"{inp}/delivery_b.parquet")
@@ -528,22 +513,8 @@ def q84_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(inp)
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            dedup_stream(stream)
-            .writeStream.foreachBatch(
-                lambda df, _bid: df.write.mode("append").parquet(out)
-            )
-            .option("checkpointLocation", f"{base}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.read.parquet(out).select("id", "status", "version_id")
+    out = drain(dedup_stream(stream), f"{base}/ckpt", f"{base}/out", partitions=4)
+    return out.select("id", "status", "version_id")
 
 
 # ---------------------------------------------------------------------------
@@ -651,7 +622,8 @@ _patch_q86_oracle()
 #
 # Scale shape: both streams hash-partition on user_id; the join state
 # per key is bounded by the interval width × arrival rate. No driver
-# collection anywhere — foreachBatch appends partition-wise to parquet.
+# collection anywhere — the native file sink appends partition-wise to
+# parquet.
 
 ATTRIB_WINDOW_MIN = 30
 
@@ -700,10 +672,11 @@ def _stream_attribution(
       case asserts multi-batch output == the single-batch/batch-join
       result, proving the eviction discipline drops nothing."""
     from ..scratch import scratch_dir
+    from ..streaming.drain import drain
 
     ev = load_tables(spark, sf_dir, ["events"])["events"]
     base = scratch_dir("q97_stream_prod" if production else "q97_stream")
-    clicks_in, purch_in, out = f"{base}/clicks", f"{base}/purchases", f"{base}/out"
+    clicks_in, purch_in = f"{base}/clicks", f"{base}/purchases"
     clicks_df = ev.filter(F.col("event_type") == "click").select(
         F.col("user_id"),
         F.col("event_id").alias("click_id"),
@@ -791,21 +764,7 @@ def _stream_attribution(
         F.expr("timestampdiff(MICROSECOND, click_ts, purchase_ts)").alias("lag_us"),
     )
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            joined.writeStream.foreachBatch(
-                lambda df, _bid: df.write.mode("append").parquet(out)
-            )
-            .option("checkpointLocation", f"{base}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.read.parquet(out)
+    return drain(joined, f"{base}/ckpt", f"{base}/out", partitions=8)
 
 
 # ---------------------------------------------------------------------------
@@ -831,11 +790,6 @@ def _stream_attribution(
 # watermark with its own arrivals.
 
 SESSION_GAP_MIN = 30
-
-#: The q120/q242 drains flush their final rows in the engine's closing
-#: no-data micro-batch, so each drain pins this conf on for its own run
-#: rather than inheriting whatever the session carries.
-NO_DATA_BATCHES_CONF = "spark.sql.streaming.noDataMicroBatches.enabled"
 
 
 @register(
@@ -876,10 +830,11 @@ def q120_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     import datetime as _dt
 
     from ..scratch import scratch_dir
+    from ..streaming.drain import drain
 
     ev = load_tables(spark, sf_dir, ["events"])["events"]
     base = scratch_dir("q120_sessions")
-    inp, out = f"{base}/in", f"{base}/out"
+    inp = f"{base}/in"
 
     feed = ev.select(
         "user_id",
@@ -942,24 +897,8 @@ def q120_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).cast("long").alias("vm"),
     ).coalesce(1).write.mode("append").parquet(inp)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_no_data = spark.conf.get(NO_DATA_BATCHES_CONF)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set(NO_DATA_BATCHES_CONF, "true")
-    try:
-        q = (
-            sessions.writeStream.foreachBatch(
-                lambda df, _bid: df.write.mode("append").parquet(out)
-            )
-            .option("checkpointLocation", f"{base}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(NO_DATA_BATCHES_CONF, prev_no_data)
-    return spark.read.parquet(out).filter(F.col("user_id") >= 0)
+    out = drain(sessions, f"{base}/ckpt", f"{base}/out", partitions=8)
+    return out.filter(F.col("user_id") >= 0)
 
 
 # ---------------------------------------------------------------------------
@@ -996,6 +935,7 @@ def q120_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q130_stream_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..scratch import scratch_dir
     from ..sinks.merge_writer import ParquetSwapMergeWriter
+    from ..streaming.drain import drain
 
     ev = load_tables(spark, sf_dir, ["events"])["events"]
     base = scratch_dir("q130_rollup")
@@ -1044,23 +984,14 @@ def q130_stream_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("vm").alias("value_millis"),
     )
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            agg.writeStream.foreachBatch(
-                lambda df, _bid: writer.merge_incoming(
-                    df, key=["event_type", "day"], full_sync=False
-                )
-            )
-            .outputMode("update")
-            .option("checkpointLocation", f"{base}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    drain(
+        agg,
+        f"{base}/ckpt",
+        lambda df, _bid: writer.merge_incoming(
+            df, key=["event_type", "day"], full_sync=False
+        ),
+        partitions=8,
+    )
     return writer.read()
 
 
@@ -1093,10 +1024,11 @@ def q130_stream_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q144_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..scratch import scratch_dir
+    from ..streaming.drain import drain
 
     t = load_tables(spark, sf_dir, ["events", "customer"])
     base = scratch_dir("q144_enrich")
-    inp, out = f"{base}/in", f"{base}/out"
+    inp = f"{base}/in"
 
     feed = t["events"].select(
         "user_id",
@@ -1116,23 +1048,8 @@ def q144_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_mktsegment", "event_type", "user_id", "vm"
     )
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            enriched.writeStream.foreachBatch(
-                lambda df, _bid: df.write.mode("append").parquet(out)
-            )
-            .option("checkpointLocation", f"{base}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-
     return (
-        spark.read.parquet(out)
+        drain(enriched, f"{base}/ckpt", f"{base}/out", partitions=8)
         .groupBy("c_mktsegment", "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -1196,10 +1113,11 @@ Q242_SENTINEL_H = (2,)
 )
 def q242_stream_attribution_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..scratch import scratch_dir
+    from ..streaming.drain import drain
 
     ev = load_tables(spark, sf_dir, ["events"])["events"]
     base = scratch_dir("q242_stream_outer")
-    clicks_in, purch_in, out = f"{base}/clicks", f"{base}/purchases", f"{base}/out"
+    clicks_in, purch_in = f"{base}/clicks", f"{base}/purchases"
     clicks_df = ev.filter(F.col("event_type") == "click").select(
         F.col("user_id"),
         F.col("event_id").alias("click_id"),
@@ -1281,16 +1199,6 @@ def q242_stream_attribution_outer(spark: SparkSession, sf_dir: str) -> DataFrame
         .parquet(purch_in)
         .withWatermark("purchase_ts", "10 minutes")
     )
-    # The streaming plan stays BARE join: a user_id >= 0 filter attached
-    # here gets pushed below the EventTimeWatermark collection (the key
-    # equality lets Catalyst derive p_user_id >= 0 for the right side
-    # too), which silently deletes the sentinels' watermark contribution
-    # — and the latest real click then never evicts. Verified live: with
-    # the filter in-plan the drain emitted 209/210 rows, the missing row
-    # being the max-ts click's NULL emission. Sentinel filtering and the
-    # output projection therefore run INSIDE foreachBatch, where the
-    # micro-batch frame is plain batch data and cannot feed back into
-    # watermark tracking.
     joined = clicks.join(
         purchases,
         F.expr(
@@ -1300,35 +1208,25 @@ def q242_stream_attribution_outer(spark: SparkSession, sf_dir: str) -> DataFrame
         ),
         "leftOuter",
     )
-
-    def _write_batch(df, _bid):
-        df.filter(F.col("user_id") >= 0).select(
-            "user_id",
-            "click_id",
-            "purchase_id",
-            F.expr("timestampdiff(MICROSECOND, click_ts, purchase_ts)").alias(
-                "lag_us"
-            ),
-        ).write.mode("append").parquet(out)
-
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     # 4 partitions, not q97's 8: the outer join holds EVERY click in
     # state until watermark eviction, so per-batch state-store commit
     # cost scales with partition count x batches; 8 -> 4 measured
     # 7.3s -> 4.2s at sf0.1 with identical output (state still fits
     # trivially; a production deployment sizes this to arrival rate)
-    prev_no_data = spark.conf.get(NO_DATA_BATCHES_CONF)
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    spark.conf.set(NO_DATA_BATCHES_CONF, "true")
-    try:
-        q = (
-            joined.writeStream.foreachBatch(_write_batch)
-            .option("checkpointLocation", f"{base}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(NO_DATA_BATCHES_CONF, prev_no_data)
-    return spark.read.parquet(out)
+    out = drain(joined, f"{base}/ckpt", f"{base}/out", partitions=4)
+    # The streaming plan stays a BARE join: a user_id >= 0 filter
+    # attached to it gets pushed below the EventTimeWatermark collection
+    # (the key equality lets Catalyst derive p_user_id >= 0 for the right
+    # side too), which silently deletes the sentinels' watermark
+    # contribution — and the latest real click then never evicts.
+    # Verified live: with the filter in-plan the drain emitted 209/210
+    # rows, the missing row being the max-ts click's NULL emission.
+    # Sentinel filtering and the output projection therefore run on the
+    # drained rows, a plain batch read that cannot feed back into
+    # watermark tracking.
+    return out.filter(F.col("user_id") >= 0).select(
+        "user_id",
+        "click_id",
+        "purchase_id",
+        F.expr("timestampdiff(MICROSECOND, click_ts, purchase_ts)").alias("lag_us"),
+    )

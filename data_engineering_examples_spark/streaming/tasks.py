@@ -9,11 +9,12 @@ audit notes (``:128-234``). Here:
 * **poll** (T1/W1/P8) — the search-param dict becomes a filter + sort +
   limit over the tasks table; the version runaway guard (versionId>1000,
   ``:88``) and the completed-skip (``:404-411``) are predicates.
-* **stream** (S9: status writeback) — ``readStream`` over the tasks directory; each new file is
-  a micro-batch (the 1-minute poll becomes a trigger interval;
-  ``availableNow`` in tests). State transitions run in ``foreachBatch``
-  through the same set-based changeset algebra as L5 — on a Delta sink
-  this is a MERGE per micro-batch.
+* **stream** (S9: status writeback) — ``readStream`` over the tasks
+  directory; each new file is a micro-batch (the 1-minute poll becomes
+  an ``availableNow`` drain through ``streaming/drain.py``). State
+  transitions run per micro-batch in ``TaskStateMachine.process_batch``,
+  the drain's callable sink, through the same set-based changeset
+  algebra as L5 — on a Delta sink this is a MERGE per micro-batch.
 * **at-least-once guards** (T2) — batch-local ``dropDuplicates`` on task
   id (keep max version) + terminal-state check against the state table:
   re-delivered tasks transition at most once; completed/failed/cancelled
@@ -35,6 +36,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .drain import drain
 
 VERSION_RUNAWAY = 1000  # poll guard, ConsultationNoteWritebackX.py:88
 TERMINAL = ("completed", "failed", "cancelled", "rejected")
@@ -206,16 +209,10 @@ class TaskStateMachine:
         swap_write(new_state, self.state_dir)
 
     def run_available(self, input_dir: str, checkpoint_dir: str) -> None:
-        """Drain all unprocessed files (T1: the poll trigger; tests use
-        availableNow so the query stops at the current end of stream)."""
+        """Drain all unprocessed files (T1: the poll trigger, run to the
+        current end of stream)."""
         stream = self.spark.readStream.schema(TASK_SCHEMA).parquet(input_dir)
-        q = (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drain(stream, checkpoint_dir, self.process_batch)
 
 
 def task_throughput(stream: DataFrame, window: str = "1 hour") -> DataFrame:
@@ -254,7 +251,12 @@ def task_progress_stateful(stream: DataFrame) -> DataFrame:
     """Per-task progress tracker: counts deliveries, keeps the
     highest-version status seen (at-least-once tolerant — re-deliveries
     bump ``n_updates`` but can never regress ``status`` to a lower
-    version). State is (n_updates, max_version, status) per task id."""
+    version). State is (n_updates, max_version, status) per task id.
+
+    Each micro-batch emits one progress snapshot per task it touched;
+    the output is an append-only log of those snapshots (the latest per
+    task has the largest ``n_updates``), so it drains into a plain
+    append sink."""
     import pandas as pd  # local: executors import lazily
 
     def update(key, pdfs, state):
@@ -279,7 +281,7 @@ def task_progress_stateful(stream: DataFrame) -> DataFrame:
         update,
         TASK_PROGRESS_SCHEMA,
         _PROGRESS_STATE_SCHEMA,
-        "update",
+        "append",
         GroupStateTimeout.NoTimeout,
     )
 

@@ -119,7 +119,6 @@ WRITE_SEAMS = {
     ("plans/corpus_queries.py", "q110_schema_evolution"): "schema-evolution "
     "staging: writes two generations of the same table",
     ("plans/etl_queries.py", "q150_write_audit_publish"): "write-audit-publish",
-    ("plans/etl_queries.py", "q185_ods_zip_stream"): "streaming feed staging",
     ("plans/etl_queries.py", "q186_ods_zip_roundtrip"): "roundtrip staging",
     ("plans/etl_queries.py", "q207_ods_zip_stream_write"): "stream write op",
     ("plans/etl_queries.py", "q209_observed_ingest"): "ingest staging",
@@ -127,8 +126,6 @@ WRITE_SEAMS = {
     "merge rerun: writes the same changeset twice on purpose",
     ("plans/training_queries.py", "q119_bloom_pruned_join"): "bloom-pruned "
     "join needs an on-disk build side for the runtime filter",
-    ("plans/workflow_queries.py", "q83_stateful_progress"): "stream staging",
-    ("plans/workflow_queries.py", "q84_stream_dedup"): "stream staging",
     ("plans/workflow_queries.py", "_stream_attribution"): "stream staging",
     ("plans/workflow_queries.py", "_stage"): "q97 production-path stream "
     "staging (per-side time-slice writer, run per side from §2.6 threads)",
@@ -146,7 +143,6 @@ WRITE_SEAMS = {
     "staging (real rows + two watermark sentinels, mtime-ordered)",
     ("plans/workflow_queries.py", "_stage_purchases"): "q242 purchase-side "
     "feed staging (real rows + two watermark sentinels, mtime-ordered)",
-    ("plans/workflow_queries.py", "_write_batch"): "foreachBatch sink body",
 }
 
 #: receivers whose .first(...) / .head(...) are column expressions or

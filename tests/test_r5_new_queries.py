@@ -322,6 +322,7 @@ def test_ods_zip_stream_resumes_from_offset(spark):
     from data_engineering_examples_spark.scratch import scratch_dir
     from data_engineering_examples_spark.sources import ods_datasource
     from data_engineering_examples_spark.sources.fhir import FIXTURES_DIR
+    from data_engineering_examples_spark.streaming.drain import drain
 
     ods_datasource.register(spark)
     base = scratch_dir("test_ods_zip_stream")
@@ -332,27 +333,17 @@ def test_ods_zip_stream_resumes_from_offset(spark):
     lines = open(f"{FIXTURES_DIR}/epraccur.csv").read().splitlines(keepends=True)
     half = len(lines) // 2
 
-    def drain():
-        q = (
-            spark.readStream.format("ods_zip")
-            .load(feed)
-            .writeStream.foreachBatch(
-                lambda df, _b: df.write.mode("append").parquet(out)
-            )
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    def drain_feed():
+        drain(spark.readStream.format("ods_zip").load(feed), ck, out)
 
     with zipfile.ZipFile(f"{feed}/drop_a.zip", "w") as z:
         z.writestr("m1.csv", "".join(lines[:half]))
-    drain()
+    drain_feed()
     assert spark.read.parquet(out).count() == half
 
     with zipfile.ZipFile(f"{feed}/drop_b.zip", "w") as z:
         z.writestr("m1.csv", "".join(lines[half:]))
-    drain()
+    drain_feed()
     df = spark.read.parquet(out)
     # full feed ingested, drop_a NOT re-read on resume
     assert df.count() == len(lines)

@@ -18,6 +18,7 @@ from data_engineering_examples_spark.functions.documents import (
     operation_outcome_failed,
 )
 from data_engineering_examples_spark.sources.fhir import FIXTURES_DIR, load_fhir_tables
+from data_engineering_examples_spark.streaming.drain import drain
 from data_engineering_examples_spark.streaming.tasks import (
     TASK_SCHEMA,
     TaskStateMachine,
@@ -219,17 +220,7 @@ def test_stateful_progress_two_restarts(spark, tmp_path):
 
     def run_once():
         stream = spark.readStream.schema(TASK_SCHEMA).parquet(in_dir)
-        prog = task_progress_stateful(stream)
-        q = (
-            prog.writeStream.foreachBatch(
-                lambda df, _bid: df.write.mode("append").parquet(out)
-            )
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drain(task_progress_stateful(stream), ckpt, out)
 
     b1 = spark.createDataFrame(
         [_task_row(1, version=1), _task_row(1, version=2), _task_row(2, version=1)],
@@ -274,16 +265,7 @@ def test_dedup_stream_drops_redeliveries(spark, tmp_path):
     b1.coalesce(1).write.mode("append").parquet(in_dir)
 
     stream = spark.readStream.schema(TASK_SCHEMA).parquet(in_dir)
-    q = (
-        dedup_stream(stream)
-        .writeStream.foreachBatch(
-            lambda df, _bid: df.write.mode("append").parquet(out)
-        )
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(dedup_stream(stream), ckpt, out)
     got = [(r.id, r.version_id) for r in spark.read.parquet(out).collect()]
     assert sorted(got) == [("t1", 1), ("t1", 2)]
 
