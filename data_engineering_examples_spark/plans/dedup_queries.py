@@ -1497,60 +1497,66 @@ def q215_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # q228 — k-core of the near-dup candidate graph: peel vertices of
-# degree < K until (bounded) fixpoint; what survives is the dense
-# heart of each duplication family — the "template farms" (boilerplate
-# mills, mirror clusters) that near-dup PAIR counts understate and
-# connected components overstate (a long chain is one component but
-# has no core). Curation uses the core as the aggressive-dedup target
-# while chain-only members get the benefit of the doubt.
+# degree < K until the fixpoint; what survives is the dense heart of
+# each duplication family — the "template farms" (boilerplate mills,
+# mirror clusters) that near-dup PAIR counts understate and connected
+# components overstate (a long chain is one component but has no core).
+# Curation uses the core as the aggressive-dedup target while
+# chain-only members get the benefit of the doubt.
 #
-# Determinism: both engines peel EXACTLY Q228_ROUNDS rounds from the
-# same LSH pair set (the one _duck_minhash_bands_cte definition), so
-# the bound cannot silently diverge; the fixture reaches fixpoint
-# within the bound (the oracle would disagree otherwise — deg counts
-# keep shifting until the peel settles).
+# Determinism: both engines peel the same LSH pair set (the one
+# _duck_minhash_bands_cte definition) until the edge count stops
+# falling.  The oracle's recursive CTE emits a peel step only while the
+# count falls; one more peel of the last step's rows is the identity at
+# the fixpoint and empties a graph whose every edge drops.
 #
 # Scale shape: see operators/graph.py:k_core — per round one
 # map-side-combinable degree agg + two key-partitioned hash joins of a
-# shrinking edge set, each round durably materialized.
+# shrinking edge set, each round durably materialized with its edge
+# count observed on the write.
 
 Q228_K = 2
-Q228_ROUNDS = 4
 
 
-def _duck_kcore_oracle() -> str:
-    peel = []
-    for r in range(Q228_ROUNDS):
-        peel.append(
-            f"""d{r} AS MATERIALIZED (SELECT u, count(*) AS c FROM e{r} GROUP BY u),
-    s{r} AS MATERIALIZED (SELECT u FROM d{r} WHERE c >= {Q228_K}),
-    e{r + 1} AS MATERIALIZED (
-      SELECT e.u, e.v FROM e{r} e
-      JOIN s{r} a ON e.u = a.u JOIN s{r} b ON e.v = b.u
-    )"""
-        )
-    chain = ",\n    ".join(peel)
-    return f"""
-    WITH {_duck_minhash_bands_cte()},
+def _duck_kcore_peel(src: str) -> str:
+    """One peel step: the rows of ``src`` whose endpoints ``u`` and
+    ``v`` both have degree >= Q228_K in ``src`` (windowed counts)."""
+    return f"""SELECT * EXCLUDE (du, dv) FROM (
+        SELECT *, count(*) OVER (PARTITION BY u) AS du,
+               count(*) OVER (PARTITION BY v) AS dv
+        FROM {src}
+      ) WHERE du >= {Q228_K} AND dv >= {Q228_K}"""
+
+
+_DUCK_KCORE_ORACLE = f"""
+    WITH RECURSIVE {_duck_minhash_bands_cte()},
     pairs AS MATERIALIZED (
       SELECT DISTINCT a.doc_id AS u, b.doc_id AS v
       FROM bands a JOIN bands b
         ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
     ),
     e0 AS MATERIALIZED (SELECT u, v FROM pairs UNION SELECT v AS u, u AS v FROM pairs),
-    {chain}
+    peel(it, u, v, n) AS (
+      SELECT 0, u, v, count(*) OVER () FROM e0
+      UNION ALL
+      SELECT it + 1, u, v, m FROM (
+        SELECT it, u, v, n, count(*) OVER () AS m
+        FROM ({_duck_kcore_peel("peel")})
+      ) WHERE m < n
+    ),
+    last AS (SELECT u, v FROM peel WHERE it = (SELECT max(it) FROM peel))
     SELECT u AS doc_id, CAST(count(*) AS BIGINT) AS core_deg
-    FROM e{Q228_ROUNDS} GROUP BY u
+    FROM ({_duck_kcore_peel("last")}) GROUP BY u
     """
 
 
 @register(
     "q228_neardup_kcore",
-    oracle=_duck_kcore_oracle(),
-    doc=f"k-core (k={Q228_K}, {Q228_ROUNDS} peel rounds) of the "
+    oracle=_DUCK_KCORE_ORACLE,
+    doc=f"k-core (k={Q228_K}, peeled to the fixpoint) of the "
     "MinHash-LSH near-dup graph: dense duplication families vs "
-    "chain-only members; bounded-round peel with per-round durable "
-    "materialization",
+    "chain-only members; each round durably materialized, convergence "
+    "read off the round's own edge count",
     tags=("dedup", "llm", "graph"),
 )
 def q228_neardup_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1559,7 +1565,7 @@ def q228_neardup_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = q24_minhash_lsh_pairs(spark, sf_dir).select(
         F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
     )
-    core = k_core(pairs, Q228_K, Q228_ROUNDS, scratch_prefix="q228_kcore")
+    core = k_core(pairs, Q228_K, scratch_prefix="q228_kcore")
     return core.select(F.col("u").alias("doc_id"), "core_deg")
 
 

@@ -1109,8 +1109,6 @@ def q202_cdc_log_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("etl", "S1", "S6", "streaming", "T1"),
 )
 def q207_ods_zip_stream_write(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os as _os
-
     from ..scratch import scratch_dir
     from ..sources import ods_datasource
     from ..streaming.drain import drain

@@ -72,13 +72,6 @@ ACTION_SEAMS = {
     ): "one-row max(ts) aggregate to compute the watermark-flush sentinel "
     "timestamp for the staged feed (scale-safe: aggregate of the feed)",
     (
-        "operators/graph.py",
-        "connected_components",
-        "first",
-    ): "one-row fixpoint probe after EVERY round: the exact DECIMAL sum "
-    "of the labels just materialized; labels only decrease, so an "
-    "unchanged sum means converged, and hitting the hard cap raises",
-    (
         "plans/training_queries.py",
         "q240_linear_probe_gd",
         "first",

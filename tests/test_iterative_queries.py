@@ -246,12 +246,12 @@ def test_cc_empty_graph_converges_immediately(spark):
 
 
 def test_cc_early_convergence_stops_after_two_rounds(spark):
-    """r14: the fixpoint is probed after EVERY round (the probe is a
-    one-row scalar agg on the just-materialized label table; a wasted
-    post-fixpoint round is two joins + a full materialization).  A
-    clique converges in round 0, the round-1 probe observes the
-    unchanged sum, and NO round-2 label table may ever be built — the
-    old probe-skip heuristic burned two extra rounds here."""
+    """r14: the fixpoint is probed after EVERY round (the label sum is
+    observed on the round's own label write; a wasted post-fixpoint
+    round is two joins + a full materialization).  A clique converges
+    in round 0, round 1's write observes the unchanged sum, and NO
+    round-2 label table may ever be built — the old probe-skip
+    heuristic burned two extra rounds here."""
     from data_engineering_examples_spark import scratch
     from data_engineering_examples_spark.operators.graph import (
         connected_components,
@@ -268,6 +268,47 @@ def test_cc_early_convergence_stops_after_two_rounds(spark):
     assert got == {(0, 0), (1, 0), (2, 0)}
     assert "t_ccclique_labels_r1" in scratch._MATERIALIZE_GEN
     assert "t_ccclique_labels_r2" not in scratch._MATERIALIZE_GEN
+
+
+def test_kcore_peels_long_tail_to_fixpoint(spark):
+    """k_core peels until its edge count stops falling: a triangle with
+    a 30-edge tail hanging off vertex 2 loses the whole tail (one tail
+    edge per round, ~30 rounds) and keeps only the triangle, each vertex
+    with in-core degree 2."""
+    from data_engineering_examples_spark.operators.graph import k_core
+
+    tri = [(0, 1), (1, 2), (0, 2)]
+    tail = [(2 + i, 3 + i) for i in range(30)]
+    edges = spark.createDataFrame(tri + tail, "u long, v long")
+    got = {
+        (r.u, r.core_deg)
+        for r in k_core(edges, 2, scratch_prefix="t_kctail").collect()
+    }
+    assert got == {(0, 2), (1, 2), (2, 2)}
+
+
+def test_kcore_empty_graph_returns_no_rows(spark):
+    """An empty edge set is already at the fixpoint: no rows, no raise."""
+    from data_engineering_examples_spark.operators.graph import k_core
+
+    edges = spark.createDataFrame([], "u long, v long")
+    assert k_core(edges, 2, scratch_prefix="t_kcempty").collect() == []
+
+
+def test_kcore_triangle_stops_after_confirming_round(spark):
+    """A triangle is its own 2-core: round 1's write observes the
+    unchanged edge count, so no round-2 edge table is ever built."""
+    from data_engineering_examples_spark import scratch
+    from data_engineering_examples_spark.operators.graph import k_core
+
+    edges = spark.createDataFrame([(0, 1), (1, 2), (0, 2)], "u long, v long")
+    got = {
+        (r.u, r.core_deg)
+        for r in k_core(edges, 2, scratch_prefix="t_kctri").collect()
+    }
+    assert got == {(0, 2), (1, 2), (2, 2)}
+    assert "t_kctri_edges_r1" in scratch._MATERIALIZE_GEN
+    assert "t_kctri_edges_r2" not in scratch._MATERIALIZE_GEN
 
 
 def test_semdedup_zero_norm_vector_fails_loudly_on_both_paths(spark, tmp_path):

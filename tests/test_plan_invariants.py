@@ -217,9 +217,6 @@ def test_driver_first_calls_are_single_row_bounds_only():
     # data path. workflow_queries.py: q97's production-path time-bound
     # fetch feeding its sliced fixture staging (q120/q242's sentinel
     # bounds ride the staging writes as observe() metrics since r14).
-    # graph.py: connected_components' fixpoint probe — one
-    # exact-decimal label sum per barrier (the r9 sf1 sweep showed
-    # fixed round budgets silently truncate components at scale).
     # training_queries.py (r13): q240's one-row sufficient-statistics
     # fetch (the GD trajectory is driver arithmetic on nine integers)
     # and q241's one-row histogram fetch per boosting round (split
@@ -229,7 +226,6 @@ def test_driver_first_calls_are_single_row_bounds_only():
     # round (TakeOrdered argmax of the vocab pair-count aggregate).
     assert sorted(sites) == [
         "etl_queries.py",
-        "graph.py",
         "text_queries.py",
         "training_queries.py",
         "training_queries.py",

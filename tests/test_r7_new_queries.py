@@ -205,9 +205,8 @@ def test_cuped_matches_python_recompute(spark):
 
 
 def test_kcore_matches_python_fixpoint(spark):
-    """q228: the bounded-round peel must equal the true (fixpoint)
-    2-core at fixture scale — proving Q228_ROUNDS covers convergence —
-    and every reported degree is the in-core degree.
+    """q228: the peel must equal a Python fixpoint 2-core at fixture
+    scale, and every reported degree is the in-core degree.
     """
     from collections import defaultdict
 

@@ -6,7 +6,8 @@ build itself) as it does in an in-order session where some other query
 built the substrate earlier.  r11 hand-verified this contract when the
 memoization landed; this test machine-enforces it: each consumer runs
 in a SUBPROCESS with a vanilla SparkSession (the driver's environment —
-no tuned factory) at sf0.001, and the normalized row set is compared
+no tuned factory) at sf0.001, sharing that session only with consumers
+of other substrates, and the normalized row set is compared
 against the shared in-process session's result, which has built the
 substrates in whatever order the surrounding test run happened to use.
 
@@ -34,47 +35,33 @@ from .conftest import REPO_ROOT, SF_SMOKE
 
 #: One consumer per distinct (substrate, consumer-shape) edge: direct
 #: builders, cross-module composers, and the deepest chains (q256 reads
-#: q72's membership which reads q24's pairs which reads the shingles).
-CONSUMERS = [
-    "q23_ngram_jaccard_pairs",
-    "q24_minhash_lsh_pairs",
-    "q72_dedup_clusters",
-    "q231_semantic_dedup",
-    "q246_paraphrase_candidates",
-    "q247_soft_dedup_weights",
-    "q250_dedup_adjusted_mix",
-    "q255_cluster_safe_split",
-    "q256_dedup_cluster_report",
-    "q257_minhash_calibration",
-    "q260_semdedup_threshold_sweep",
-    # image_dhash substrate (multimodal_queries._phash_pairs, r12):
-    # the direct pair finder, the CC composer, and the caption-Jaccard
-    # cross-modality composer
-    "q224_image_phash_neardup",
-    "q226_canonical_media",
-    "q264_pair_dedup_verdict",
-    # kmeans_xq substrate (similarity_queries._xq_substrate, r13): the
-    # quantized per-dim embedding fact shared by five exact-integer
-    # pipelines — cover the Lloyd consumer, the PQ-code consumer (which
-    # derives its subspace projection from the shared dims), and the
-    # learned-SemDeDup composer (deepest chain: substrate -> 2 Lloyd
-    # rounds -> pair closure)
-    "q94_kmeans_refine",
-    "q101_pq_codes",
-    "q235_semantic_dedup_learned",
-    # lsh_bands substrate (similarity_queries._lsh_bands_substrate, r13):
-    # the probe server and the near-dup miner; q201 composes q32 so the
-    # recall audit rides the same coverage
-    "q32_ann_lsh_topk",
-    "q49_embedding_neardup",
-    # r14: q238 serves its canonical-subset bands from the same index
-    # (semi-join on the keeper set)
-    "q238_canonical_neardup",
-    # ivf_ranked substrate (similarity_queries._ivf_ranked_substrate,
-    # r13): the serve path and the label-filtered search
-    "q50_ivf_topk",
-    "q217_filtered_ann",
+#: q72's membership which reads q24's pairs which reads the shingles),
+#: packed into children whose consumers share no substrate.  The nine
+#: consumers of ``hashed_shingles`` (q23, q24, q72, q246, q247, q250,
+#: q255, q256, q257) each head their own child; the consumers of the
+#: other substrates ride along, one per child for each substrate:
+#:   semdedup_coarse_assign/_pairs  q231, q246, q260
+#:   image_dhash                    q224, q226, q264 (pair finder, CC
+#:                                  composer, caption-Jaccard composer)
+#:   kmeans_xq                      q94, q101, q235 (Lloyd, PQ codes, the
+#:                                  learned-SemDeDup closure)
+#:   lsh_bands                      q32, q49, q238 (probe server,
+#:                                  near-dup miner, canonical subset)
+#:   ivf_ranked                     q50, q217 (serve, filtered search)
+#: The child itself checks the packing: a consumer served a substrate
+#: that an earlier consumer in its child built fails the child.
+CHILDREN = [
+    ("q23_ngram_jaccard_pairs", "q238_canonical_neardup"),
+    ("q24_minhash_lsh_pairs", "q231_semantic_dedup", "q226_canonical_media"),
+    ("q72_dedup_clusters", "q50_ivf_topk"),
+    ("q246_paraphrase_candidates", "q224_image_phash_neardup", "q94_kmeans_refine"),
+    ("q247_soft_dedup_weights", "q260_semdedup_threshold_sweep", "q101_pq_codes"),
+    ("q250_dedup_adjusted_mix", "q264_pair_dedup_verdict", "q217_filtered_ann"),
+    ("q255_cluster_safe_split", "q235_semantic_dedup_learned"),
+    ("q256_dedup_cluster_report", "q32_ann_lsh_topk"),
+    ("q257_minhash_calibration", "q49_embedding_neardup"),
 ]
+CONSUMERS = [name for child in CHILDREN for name in child]
 
 _CHILD = """
 import sys, json
@@ -87,13 +74,21 @@ spark = (
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 )
+from data_engineering_examples_spark import scratch
 from data_engineering_examples_spark.plans import all_specs
 
-name, sf = sys.argv[1], sys.argv[2]
-df = all_specs()[name].fn(spark, sf)
-cols = sorted(df.columns)
-rows = sorted(repr(tuple(repr(r[c]) for c in cols)) for r in df.collect())
-print("RESULT::" + json.dumps({"cols": cols, "rows": rows}))
+names, sf = json.loads(sys.argv[1]), sys.argv[2]
+for name in names:
+    before = set(scratch._SUBSTRATE_MEMO)
+    df = all_specs()[name].fn(spark, sf)
+    cols = sorted(df.columns)
+    rows = sorted(repr(tuple(repr(r[c]) for c in cols)) for r in df.collect())
+    added = {key[1] for key in set(scratch._SUBSTRATE_MEMO) - before}
+    stale = set(scratch.drain_substrate_hits()) - added
+    if stale:
+        sys.exit(f"{name} was served {sorted(stale)}, built by an earlier "
+                 "consumer in this child: it did not run first for them")
+    print("RESULT::" + json.dumps({"name": name, "cols": cols, "rows": rows}))
 """
 
 
@@ -108,37 +103,41 @@ def _normalize(df):
 _WINDOW = max(1, (os.cpu_count() or 1) // 2)
 
 
-def _run_child(name):
+def _run_child(names):
     proc = subprocess.run(
-        [sys.executable, "-c", _CHILD, name, SF_SMOKE, REPO_ROOT],
+        [sys.executable, "-c", _CHILD, json.dumps(names), SF_SMOKE, REPO_ROOT],
         capture_output=True,
         text=True,
-        timeout=300,
+        timeout=600,
     )
-    return proc.returncode, proc.stdout, proc.stderr
+    results = {}
+    for ln in proc.stdout.splitlines():
+        if ln.startswith("RESULT::"):
+            r = json.loads(ln[len("RESULT::"):])
+            results[r.pop("name")] = r
+    return {name: (proc.returncode, results.get(name), proc.stderr) for name in names}
 
 
 @pytest.fixture(scope="module")
 def fresh_results():
-    """One child session per consumer, at most ``_WINDOW`` running at
-    a time.  Each child is still a fully fresh session in which its
-    query runs FIRST — concurrency is between processes, never inside
-    one."""
+    """One child session per entry of ``CHILDREN``, at most ``_WINDOW``
+    running at a time.  Every consumer is the first in its child to
+    touch each of its substrates, so it triggers their builds itself —
+    concurrency is between processes, never inside one."""
+    out = {}
     with ThreadPoolExecutor(max_workers=_WINDOW) as pool:
-        return dict(zip(CONSUMERS, pool.map(_run_child, CONSUMERS)))
+        for child in pool.map(_run_child, CHILDREN):
+            out.update(child)
+    return out
 
 
 @pytest.mark.parametrize("name", CONSUMERS)
 def test_consumer_matches_when_first_in_fresh_session(name, spark, fresh_results):
     in_order_cols, in_order_rows = _normalize(all_specs()[name].fn(spark, SF_SMOKE))
 
-    returncode, stdout, stderr = fresh_results[name]
+    returncode, fresh, stderr = fresh_results[name]
     assert returncode == 0, f"{name} child failed:\n{stderr[-2000:]}"
-    result_lines = [
-        ln for ln in stdout.splitlines() if ln.startswith("RESULT::")
-    ]
-    assert result_lines, f"{name}: no RESULT line in child stdout"
-    fresh = json.loads(result_lines[-1][len("RESULT::"):])
+    assert fresh, f"{name}: no RESULT line in child stdout"
 
     assert fresh["cols"] == in_order_cols, name
     assert fresh["rows"] == in_order_rows, (

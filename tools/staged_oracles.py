@@ -389,8 +389,7 @@ def staged_q61(spark, sf_dir: str) -> list:
 
 def staged_q228(spark, sf_dir: str) -> list:
     from data_engineering_examples_spark.plans.dedup_queries import (
-        Q228_K,
-        Q228_ROUNDS,
+        _duck_kcore_peel,
         q228_neardup_kcore,
     )
 
@@ -401,20 +400,18 @@ def staged_q228(spark, sf_dir: str) -> list:
         "SELECT u, v FROM t_lsh_pairs "
         "UNION SELECT v AS u, u AS v FROM t_lsh_pairs",
     )
-    for r in range(Q228_ROUNDS):
-        _stage(
-            con, sf_dir, f"t228_s{r}",
-            f"SELECT u FROM (SELECT u, count(*) AS c FROM t228_e{r} GROUP BY u) "
-            f"WHERE c >= {Q228_K}",
-        )
-        _stage(
-            con, sf_dir, f"t228_e{r + 1}",
-            f"SELECT e.u, e.v FROM t228_e{r} e "
-            f"JOIN t228_s{r} a ON e.u = a.u JOIN t228_s{r} b ON e.v = b.u",
-        )
+    # peel until the stage stops shrinking (the k_core fixpoint rule)
+    r, n = 0, None
+    while True:
+        cur = con.execute(f"SELECT count(*) FROM t228_e{r}").fetchone()[0]
+        if cur == n:
+            break
+        n = cur
+        _stage(con, sf_dir, f"t228_e{r + 1}", _duck_kcore_peel(f"t228_e{r}"))
+        r += 1
     d_pdf = con.execute(
         f"SELECT u AS doc_id, CAST(count(*) AS BIGINT) AS core_deg "
-        f"FROM t228_e{Q228_ROUNDS} GROUP BY u"
+        f"FROM t228_e{r} GROUP BY u"
     ).df()
     s_pdf = q228_neardup_kcore(spark, sf_dir).toPandas()
     return _pdf_problems("q228", s_pdf, d_pdf)
