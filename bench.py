@@ -42,6 +42,14 @@ served warm from the memo are listed in the record's
 ``substrate_warm`` map — their per-query numbers measure substrate
 SERVING, not building, exactly like a production pipeline whose
 index/dedup tables are materialized once per corpus snapshot.
+
+The record says what it ran on: ``cpus`` (the session's
+``defaultParallelism``), ``spark_version`` and ``git_sha`` (None outside
+a git checkout).  ``compiles`` maps every query to the classes Janino
+compiled during its LAST timed run (``session.codegen_compiles``); with
+the generated-code cache holding the registry's working set, a warm run
+reads 0, so a nonzero entry marks a query whose generated code changes
+from run to run.
 """
 
 from __future__ import annotations
@@ -49,13 +57,18 @@ from __future__ import annotations
 import json
 import os
 import statistics
+import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
 from data_engineering_examples_spark.plans import all_specs  # noqa: E402
-from data_engineering_examples_spark.session import get_spark  # noqa: E402
+from data_engineering_examples_spark.session import (  # noqa: E402
+    codegen_compiles,
+    get_spark,
+)
 
 
 def _warm_python_and_streaming(spark) -> None:
@@ -182,9 +195,11 @@ def main() -> None:
 
     repeat = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEAT", "3")))
     runs: dict[str, list[float]] = {name: [] for name in specs}
+    compiles: dict[str, int] = {}
     substrate_warm: dict[str, list[str]] = {}
     for pass_no in range(repeat):
         for name, spec in specs.items():
+            c0 = codegen_compiles(spark)
             t0 = time.perf_counter()
             df = spec.fn(spark, sf_dir)
             # noop sink: full execution of every expression/operator, zero
@@ -192,6 +207,7 @@ def main() -> None:
             # pipe.
             df.write.format("noop").mode("overwrite").save()
             dt = round(time.perf_counter() - t0, 4)
+            compiles[name] = codegen_compiles(spark) - c0
             runs[name].append(dt)
             hits = drain_substrate_hits()
             if hits:
@@ -209,6 +225,10 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "cpus": spark.sparkContext.defaultParallelism,
+        "spark_version": spark.version,
+        "git_sha": _git_sha(),
+        "compiles": compiles,
     }
     if substrate_timings:
         # one-time session builds, visible as their own map — kept OUT
@@ -240,9 +260,7 @@ def main() -> None:
     # round's real record — last_run_full.json is gitignored either way,
     # the durable copies are the committed bench_snapshots/rNN.json.
     full_path = os.environ.get("SPARK_GRAFT_BENCH_FULL_PATH") or os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        "bench_snapshots",
-        "last_run_full.json",
+        ROOT, "bench_snapshots", "last_run_full.json"
     )
     try:
         os.makedirs(os.path.dirname(full_path), exist_ok=True)
@@ -252,6 +270,17 @@ def main() -> None:
         full_path = None  # read-only checkout: stdout shaping still applies
     print(shape_stdout(out, full_path))
     spark.stop()
+
+
+def _git_sha() -> str | None:
+    """The checkout's commit, or None when it is not a git checkout."""
+    try:
+        return subprocess.run(
+            ["git", "rev-parse", "HEAD"], cwd=ROOT, capture_output=True,
+            text=True, check=True,
+        ).stdout.strip()
+    except (OSError, subprocess.CalledProcessError):
+        return None
 
 
 #: The driver records only the last 2000 characters of stdout and
@@ -267,24 +296,25 @@ def shape_stdout(out: dict, full_path: str | None,
 
     Small runs (SPARK_GRAFT_BENCH_ONLY profiling, the contract tests)
     emit the COMPLETE record unchanged.  When it exceeds ``budget``,
-    the spread is dropped first (it lives in ``full_path``), then the
-    per-query map is truncated to the slowest queries that still fit,
-    with ``queries_omitted``/``n_queries`` making the truncation
-    explicit and ``queries_full`` pointing at the complete record.
-    ``value`` stays the total across ALL queries either way."""
+    the per-query maps other than ``queries`` are dropped first (they
+    live in ``full_path``; ``substrate_warm_n`` keeps the count of
+    substrate-warm queries), then ``queries`` is truncated to the slowest
+    queries that still fit, with ``queries_omitted``/``n_queries`` making
+    the truncation explicit and ``queries_full`` pointing at the complete
+    record.  ``value`` stays the total across ALL queries either way, and
+    the top-level scalars (``cpus`` among them) are kept."""
     line = json.dumps(out)
     if len(line) <= budget:
         return line
     slim = {
         k: v
         for k, v in out.items()
-        if k not in ("queries_spread", "substrate_warm")
+        if k not in ("queries_spread", "substrate_warm", "compiles")
     }
+    slim["substrate_warm_n"] = len(out.get("substrate_warm", {}))
     slim["n_queries"] = len(out["queries"])
     if full_path:
-        slim["queries_full"] = os.path.relpath(
-            full_path, os.path.dirname(os.path.abspath(__file__))
-        )
+        slim["queries_full"] = os.path.relpath(full_path, ROOT)
     line = json.dumps(slim)
     if len(line) <= budget:
         return line

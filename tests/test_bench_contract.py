@@ -11,6 +11,8 @@ import os
 import subprocess
 import sys
 
+import pyspark
+
 from .conftest import REPO_ROOT
 
 BENCH = os.path.join(REPO_ROOT, "bench.py")
@@ -46,6 +48,16 @@ def test_bench_prints_one_json_line_with_contract_keys(tmp_path):
     assert set(rec["queries"]) == {"q01_pricing_summary", "q03_top_orders"}
     assert rec["value"] > 0
     assert abs(rec["value"] - sum(rec["queries"].values())) < 1e-6
+    # the record says what it ran on: the session's defaultParallelism,
+    # which local[SPARK_GRAFT_CPUS] sets
+    assert rec["cpus"] == int(env["SPARK_GRAFT_CPUS"])
+    assert rec["spark_version"] == pyspark.__version__
+    assert rec["git_sha"] is None or len(rec["git_sha"]) == 40
+    # the Janino compile count of every query's last timed run
+    assert set(rec["compiles"]) == set(rec["queries"])
+    assert all(
+        type(c) is int and c >= 0 for c in rec["compiles"].values()
+    ), rec["compiles"]
     # per-query timings go to stderr, never stdout
     assert "q01_pricing_summary" in out.stderr
     # the full record landed at the env-var path, NOT in the repo tree
@@ -131,6 +143,11 @@ def test_shape_stdout_fits_driver_tail_budget():
         "unit": "sec",
         "queries": queries,
         "sf": 0.1,
+        "cpus": 4,
+        "spark_version": "4.1.2",
+        "git_sha": "0" * 40,
+        "compiles": {n: i % 3 for i, n in enumerate(queries)},
+        "substrate_warm": {n: ["hashed_shingles"] for n in list(queries)[:41]},
         "repeat": 3,
         "queries_spread": {
             n: {"median": s, "min": s, "max": s, "runs": [s, s, s]}
@@ -149,6 +166,10 @@ def test_shape_stdout_fits_driver_tail_budget():
     slowest = max(queries, key=queries.get)
     assert slowest in rec["queries"]
     assert "queries_spread" not in rec
+    # the per-query maps shrink to counts; the core count stays
+    assert rec["cpus"] == 4
+    assert rec["substrate_warm_n"] == 41
+    assert "compiles" not in rec and "substrate_warm" not in rec
 
     # small run: byte-identical passthrough
     small = {
